@@ -2,6 +2,8 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
+from contextlib import contextmanager
 from pathlib import Path
 
 import duckdb
@@ -45,6 +47,32 @@ SF_DIR = "/root/testdata/sf0.001"
 def spark():
     s = build_session(app_name="pytest", cpus=8, shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture
+def job_tasks(spark):
+    """``with job_tasks() as tasks:`` runs the block under a fresh job
+    group; on exit ``tasks`` holds the task count of each job it ran."""
+    sc = spark.sparkContext
+
+    @contextmanager
+    def run_jobs():
+        group = f"job-tasks-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        tasks: list[int] = []
+        try:
+            yield tasks
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # the status store is fed by the listener bus: drain it first
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        tracker = sc.statusTracker()
+        for job_id in sorted(tracker.getJobIdsForGroup(group)):
+            stages = (tracker.getStageInfo(s) for s in tracker.getJobInfo(job_id).stageIds)
+            tasks.append(sum(s.numTasks for s in stages if s is not None))
+
+    return run_jobs
 
 
 @pytest.fixture(scope="session")

@@ -5,8 +5,10 @@ semantics (SURVEY.md §3.4 bug ledger) on the committed JSON fixtures
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import types as T
 
 from udacity_data_engineering_spark.etl import sparkify
+from udacity_data_engineering_spark.sources import LOG_SCHEMA
 from udacity_data_engineering_spark.sources.json_source import (
     FIXTURES,
     read_log_data,
@@ -99,6 +101,26 @@ def test_permissive_malformed_line(spark):
         assert df.filter(df._corrupt_record.isNotNull()).count() == 1
     finally:
         df.unpersist()
+
+
+def test_log_schema_matches_inference(spark):
+    """The ETL's declared log schema is what inference yields on the
+    fixtures, minus the corrupt-record column — so the declared schema,
+    inference and the DuckDB oracle spec stay tied to one field list."""
+    inferred = read_log_data(spark, LOGS).schema
+    assert T.StructType(
+        [f for f in inferred.fields if f.name != "_corrupt_record"]
+    ) == LOG_SCHEMA
+
+
+def test_run_job_budget(spark, tmp_path, job_tasks):
+    """A run issues only the jobs its five writes and one read-back need:
+    no log-inference scan, no footer-schema job per read-back table, and
+    one count query for all five tables."""
+    with job_tasks() as tasks:
+        counts = sparkify.run(spark, SONGS, LOGS, str(tmp_path / "out"))
+    assert counts["songplays"] == 27
+    assert len(tasks) == 15
 
 
 def test_partitioning_layout(outputs):

@@ -8,7 +8,11 @@ from pyspark.sql import functions as F
 
 from udacity_data_engineering_spark.session import table
 from udacity_data_engineering_spark.sources.csv_source import read_csv, write_csv
-from udacity_data_engineering_spark.sources.json_source import FIXTURES, SONG_SCHEMA
+from udacity_data_engineering_spark.sources.json_source import (
+    FIXTURES,
+    SONG_SCHEMA,
+    read_song_data,
+)
 
 
 def test_csv_roundtrip_fidelity(spark, sf_dir, tmp_path):
@@ -49,6 +53,18 @@ def test_declared_schema_ignores_extra_fields(spark, tmp_path):
     df = spark.read.json(str(p), schema=SONG_SCHEMA, mode="PERMISSIVE")
     row = df.collect()[0]
     assert row.song_id == "S1" and row.duration is None
+
+
+def test_listing_fans_out_to_cores_not_paths(spark, tmp_path, job_tasks):
+    """A read of more paths than the 32-path threshold lists them in a
+    Spark job; a session this package builds gives that job at most one
+    task per core, not one per path."""
+    for i in range(40):
+        (tmp_path / f"song_{i:02d}.json").write_text(f'{{"song_id": "S{i}"}}\n')
+    with job_tasks() as tasks:
+        df = read_song_data(spark, str(tmp_path / "*.json"))
+    assert tasks and max(tasks) <= spark.sparkContext.defaultParallelism
+    assert df.count() == 40
 
 
 def test_approx_count_distinct_accuracy(spark, sf_dir):

@@ -13,18 +13,25 @@ Catalyst-friendly: the epoch→timestamp conversion uses the builtin
 ``timestamp_millis`` (not the reference's Python UDF, etl.py:124), the
 song dataset is read once and reused (the reference re-scans it,
 etl.py:61 vs 144-145), and the songplays join broadcasts the song dim.
+
+At reference-sample sizes a run's cost is its number of Spark jobs, so a
+run issues only the jobs its five writes and one read-back need (see
+process_log_data and run).
 """
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from udacity_data_engineering_spark.functions.datetime_fns import epoch_ms_to_ts
 from udacity_data_engineering_spark.operators.dedup import keep_first
 from udacity_data_engineering_spark.sources.json_source import (
+    LOG_SCHEMA,
     read_log_data,
     read_song_data,
 )
@@ -120,46 +127,76 @@ def build_songplays(spark: SparkSession, log_df: DataFrame, song_df: DataFrame) 
     )
 
 
-def process_song_data(spark: SparkSession, input_path: str, output_path: str) -> DataFrame:
+def _write(
+    df: DataFrame, output_path: str, name: str, partition_cols: list[str] | None = None
+) -> T.StructType:
+    """Write one table (overwrite; Hive-partitioned when ``partition_cols``
+    is given) and return the schema a read of it resolves to: the data
+    columns, then the partition columns, which the layout moves last."""
+    path = os.path.join(output_path, name)
+    if not partition_cols:
+        df.write.mode("overwrite").parquet(path)
+        return df.schema
+    write_partitioned(df, path, partition_cols)
+    fields = {f.name: f for f in df.schema.fields}
+    return T.StructType(
+        [f for f in df.schema.fields if f.name not in partition_cols]
+        + [fields[c] for c in partition_cols]
+    )
+
+
+def process_song_data(
+    spark: SparkSession, input_path: str, output_path: str
+) -> tuple[DataFrame, dict[str, T.StructType]]:
     """Stage 1 (etl.py:34-87). Returns the raw song scan for reuse by
-    stage 2 — the reference re-reads the JSON instead (etl.py:144-145)."""
+    stage 2 — the reference re-reads the JSON instead (etl.py:144-145) —
+    and the schema of each table written."""
     song_df = read_song_data(spark, input_path)
-    songs = build_songs(song_df)
-    write_partitioned(songs, os.path.join(output_path, "songs"), ["year", "artist_id"])
-    artists = build_artists(song_df)
-    artists.write.mode("overwrite").parquet(os.path.join(output_path, "artists"))
-    return song_df
+    schemas = {
+        "songs": _write(build_songs(song_df), output_path, "songs", ["year", "artist_id"]),
+        "artists": _write(build_artists(song_df), output_path, "artists"),
+    }
+    return song_df, schemas
 
 
 def process_log_data(
     spark: SparkSession, input_path: str, output_path: str, song_df: DataFrame
-) -> None:
-    """Stage 2 (etl.py:90-175)."""
-    log_df = read_log_data(spark, input_path).filter(F.col("page") == "NextSong")
-    build_users(log_df).write.mode("overwrite").parquet(
-        os.path.join(output_path, "users")
+) -> dict[str, T.StructType]:
+    """Stage 2 (etl.py:90-175). The log schema is declared, not inferred
+    (the reference infers it, etl.py:105): no eager scan, and the one
+    malformed line becomes an all-null row that the NextSong filter drops.
+    Returns the schema of each table written."""
+    log_df = read_log_data(spark, input_path, schema=LOG_SCHEMA).filter(
+        F.col("page") == "NextSong"
     )
-    write_partitioned(
-        build_time(log_df), os.path.join(output_path, "time"), ["year", "month"]
-    )
-    write_partitioned(
-        build_songplays(spark, log_df, F.broadcast(song_df)),
-        os.path.join(output_path, "songplays"),
-        ["year", "month"],
-    )
+    return {
+        "users": _write(build_users(log_df), output_path, "users"),
+        "time": _write(build_time(log_df), output_path, "time", ["year", "month"]),
+        "songplays": _write(
+            build_songplays(spark, log_df, F.broadcast(song_df)),
+            output_path,
+            "songplays",
+            ["year", "month"],
+        ),
+    }
 
 
 def run(spark: SparkSession, song_path: str, log_path: str, output_path: str) -> dict:
     """Full pipeline (etl.py:190-203 main) + the smoke check the
     reference defined but never called (etl.py:177-188, B5 fixed: read
-    the songplays path that was actually written)."""
-    song_df = process_song_data(spark, song_path, output_path)
-    process_log_data(spark, log_path, output_path, song_df)
-    counts = {
-        name: spark.read.parquet(os.path.join(output_path, name)).count()
-        for name in ("songs", "artists", "users", "time", "songplays")
-    }
-    return counts
+    the paths that were actually written). Each table is read back with
+    the schema it was written with, and the five counts are one grouped
+    count over their tagged union."""
+    song_df, schemas = process_song_data(spark, song_path, output_path)
+    schemas.update(process_log_data(spark, log_path, output_path, song_df))
+    tagged = [
+        spark.read.schema(schema)
+        .parquet(os.path.join(output_path, name))
+        .select(F.lit(name).alias("table"))
+        for name, schema in schemas.items()
+    ]
+    counted = dict(functools.reduce(DataFrame.unionAll, tagged).groupBy("table").count().collect())
+    return {name: counted.get(name, 0) for name in schemas}
 
 
 def main(argv: list[str] | None = None) -> dict:

@@ -253,6 +253,9 @@ def build_session(
     ``shuffle_partitions`` defaults to the core count: at local scale the
     stock 200 partitions just add task-scheduling overhead; on a real
     cluster this knob (and AQE coalesce) is sized to the data instead.
+    For the same reason the file-listing job that a read of more than 32
+    paths runs gets at most one task per core, not one per path (stock
+    caps it at 10000).
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or os.cpu_count() or 8
     shuffle_partitions = shuffle_partitions or cpus
@@ -260,6 +263,7 @@ def build_session(
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.sources.parallelPartitionDiscovery.parallelism", str(cpus))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

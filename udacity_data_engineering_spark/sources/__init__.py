@@ -13,6 +13,7 @@ from udacity_data_engineering_spark.sources import (  # noqa: F401
     xml_source,
 )
 from udacity_data_engineering_spark.sources.json_source import (  # noqa: F401
+    LOG_SCHEMA,
     SONG_SCHEMA,
     read_log_data,
     read_song_data,

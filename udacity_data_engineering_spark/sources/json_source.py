@@ -45,12 +45,19 @@ def read_song_data(spark: SparkSession, path: str | None = None) -> DataFrame:
     return spark.read.json(path, schema=SONG_SCHEMA, mode="PERMISSIVE")
 
 
-def read_log_data(spark: SparkSession, path: str | None = None) -> DataFrame:
-    """Schema-inferred JSON scan (etl.py:101,105). samplingRatio pinned to
-    1.0 so inference is deterministic (SURVEY §1.4). Production paths
-    should pass an explicit schema instead — inference is an extra eager
-    scan, unaffordable at 100 TB."""
+def read_log_data(
+    spark: SparkSession, path: str | None = None, schema: T.StructType | None = None
+) -> DataFrame:
+    """JSON-lines log scan (etl.py:101,105). The ETL passes the declared
+    ``LOG_SCHEMA``: the scan stays lazy and, PERMISSIVE, a malformed line
+    becomes an all-null row. Without ``schema`` the schema is inferred as
+    the reference does, samplingRatio pinned to 1.0 so inference is
+    deterministic (SURVEY §1.4) — an extra eager scan of all log data,
+    unaffordable at 100 TB, kept for the registry's inferring scan
+    (q_json_infer_scan) and its ``_corrupt_record`` column."""
     path = path or f"{FIXTURES}/log_data/*/*/*.json"
+    if schema is not None:
+        return spark.read.json(path, schema=schema, mode="PERMISSIVE")
     return spark.read.json(path, samplingRatio=1.0)
 
 
@@ -73,6 +80,11 @@ _LOG_FIELDS = [
 LOG_COLS_DUCK = (
     "{" + ",".join(f"'{n}':'{t}'" for n, t in _LOG_FIELDS) + "}"
 )
+
+#: Declared log schema: the inferred one minus ``_corrupt_record``
+#: (drift-guarded against inference on the fixtures by the ETL tests).
+_SPARK_TYPES = {"VARCHAR": T.StringType(), "BIGINT": T.LongType(), "DOUBLE": T.DoubleType()}
+LOG_SCHEMA = T.StructType([T.StructField(n, _SPARK_TYPES[t]) for n, t in _LOG_FIELDS])
 
 
 def _infer_scan_oracle() -> str:

@@ -67,10 +67,11 @@ def write_partitioned(
     sf0.1: 2-2.7x faster than the naive write AND one file per partition
     instead of (tasks x partitions) slivers — at 100 TB the sliver
     explosion is what kills both the write (commit of millions of files)
-    and every later read (small-files problem). ``num_tasks`` caps the
-    clustering shuffle's partition count; leave None for hash
-    distribution over spark.sql.shuffle.partitions. For skewed partition
-    keys, pass num_tasks > #partitions so AQE can split hot directories.
+    and every later read (small-files problem). ``num_tasks`` fixes the
+    clustering shuffle's width; leave None for hash distribution over
+    spark.sql.shuffle.partitions. AQE neither coalesces nor skew-splits
+    ``repartition(n, cols)``, so a hot partition value stays in one task
+    (and one file) whatever ``num_tasks`` is.
     """
     if cluster:
         df = (
