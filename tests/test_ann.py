@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import random
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -78,3 +79,60 @@ def test_ivf_scans_only_probed_lists(spark):
 def test_probe_ids_rank_by_cosine():
     centers = [[1.0, 0.0], [0.0, 1.0], [-1.0, 0.0], [0.7, 0.7]]
     assert _probe_ids([1.0, 0.1], centers, 2) == [0, 3]
+
+
+def test_ivf_assignment_is_numpy_nearest_center(spark):
+    """The assignment contract: every non-null row appears exactly once,
+    and its cluster is a nearest returned centre of its unit vector by
+    numpy arithmetic (to 1e-9 — the JVM fold sums in another order)."""
+    df, _ = _planted_corpus(spark)
+    df = df.unionByName(
+        spark.createDataFrame(
+            [(1000, None)], "vec_id long, embedding array<float>"
+        )
+    )
+    assigned, centers = ivf_assign(df, k=8)
+    rows = assigned.select("vec_id", "emb_d", "cluster").collect()
+    ids = sorted(r.vec_id for r in rows)
+    assert ids == sorted(
+        r.vec_id for r in df.filter(F.col("embedding").isNotNull()).collect()
+    )
+    c = np.asarray(centers)
+    x = np.array([r.emb_d for r in rows])
+    u = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
+    d = (c**2).sum(1)[None, :] - 2.0 * (u @ c.T)
+    got = np.array([r.cluster for r in rows])
+    assert ((0 <= got) & (got < 8)).all()
+    assert (d[np.arange(len(rows)), got] <= d.min(1) + 1e-9).all()
+
+
+def test_ivf_assign_survives_zero_vector(spark):
+    """An all-zero (non-null) embedding has no direction: it must get a
+    cluster like any other row (the 1e-12 norm floor pq_encode also
+    uses), not a DIVIDE_BY_ZERO under ANSI."""
+    df, _ = _planted_corpus(spark)
+    df = df.unionByName(
+        spark.createDataFrame(
+            [(1000, [0.0] * 64)], "vec_id long, embedding array<float>"
+        )
+    )
+    assigned, centers = ivf_assign(df, k=8)
+    zero = assigned.filter(F.col("vec_id") == 1000).collect()
+    assert len(zero) == 1 and 0 <= zero[0].cluster < len(centers)
+    assert assigned.count() == df.count()
+
+
+def test_ivf_index_build_job_budget(spark, job_tasks):
+    """Building the index is two actions for training plus the cache
+    fill. On the 8-partition planted corpus that is 8 jobs: the count
+    (2: AQE runs its shuffle-map stage as a job of its own), the
+    sample's bounded collect (3: the limit scans 1, then 4, then the
+    last 3 partitions) and the fill (3: the cache stage, then the
+    count's two). A distributed k-means fit (k-means|| init plus one
+    job per round) ran 18 here."""
+    df, _ = _planted_corpus(spark)
+    with job_tasks() as tasks:
+        assigned, _ = ivf_assign(df, k=8)
+        assigned.cache().count()
+    assigned.unpersist()
+    assert len(tasks) == 8, tasks

@@ -16,10 +16,10 @@ from udacity_data_engineering_spark.plans.registry import all_queries
 
 # the five round-5 crashers + family representatives
 PINNED = [
-    "q_ivf_topk",            # KMeans.fit on zero rows
+    "q_ivf_topk",            # IVF training on an empty sample
     "q_pq_topk",             # codebook training on an empty sample
-    "q_semantic_dedup",      # KMeans.fit via semdedup
-    "q_neardup_drop_accounting",  # KMeans.fit via the audit
+    "q_semantic_dedup",      # IVF training via semdedup
+    "q_neardup_drop_accounting",  # IVF training via the audit
     "q_parquet_partitioned",  # schema-less re-read of a file-less write
     "q_minhash_dedup_survivors",
     "q_simhash_candidates",
@@ -91,7 +91,7 @@ def test_query_survives_empty_input(name, spark, empty_dir):
 
 NULL_PINNED = [
     "q_embedding_neardup_lsh",  # null embedding reaching the GEMM kernel
-    "q_ivf_topk",               # null embedding reaching KMeans.fit
+    "q_ivf_topk",               # null embedding reaching IVF training
     "q_pq_topk",                # null embedding reaching encode/vstack
     "q_semantic_dedup",
     "q_sequence_packing",       # null text poisoning the packing kernel

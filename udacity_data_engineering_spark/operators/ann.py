@@ -2,37 +2,77 @@
 clustered scale path for E12 similarity search (SURVEY.md §2B), the
 partition-pruning complement to the LSH path in ``neardup.py``.
 
-Shape: a one-off k-means build pass assigns every vector to its nearest
+Shape: a one-off k-means build assigns every vector to its nearest
 centroid (the "inverted lists"); a query then scores only the ``nprobe``
 lists whose centroids are nearest to it — scanning nprobe/k of the data
 instead of all of it. The centroid table is model *metadata* (k × dim
-floats, a few KB) and lives on the driver / in broadcasts; the vectors
+floats, a few KB) and lives on the driver / in query plans; the vectors
 themselves never leave executors.
+
+Training is the PQ recipe (``pq.py``): seeded numpy Lloyd iterations
+over a bounded driver-side sample (``pq.unit_sample``, at most
+``pq.SAMPLE_N`` vectors) — two Spark actions (a count and a bounded
+collect) whatever the corpus size, and one k-means trainer for both ANN
+indexes. Assignment is one embarrassingly parallel pass: the k × dim
+model is folded into the plan as a single array literal and each row
+takes its nearest centre with a JVM expression — no shuffle, no Python
+worker.
 
 At 100 TB: persist the assignment as a parquet lake partitioned by
 ``cluster`` — a probe then becomes static partition pruning (only the
 probed directories are listed, let alone read), and the per-list scan is
-the same codegen'd zip_with/aggregate fold as brute force. Training
-reads a sample, not the full corpus; assignment is one embarrassingly
-parallel pass.
+the same zip_with/aggregate fold as brute force.
 
 Vectors are L2-normalized before clustering so euclidean k-means
 approximates spherical (cosine) clustering; on unit vectors
 ``argmin ||x-c||`` == ``argmax cos(x,c)``.
 
-KMeans is seeded but iterative — cluster ids are not oracle-comparable,
+Lloyd is seeded but iterative — cluster ids are not oracle-comparable,
 so the declared query is rows-only; exactness of the *verification*
 stage and recall floors are asserted in tests/test_ann.py.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import numpy as np
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from udacity_data_engineering_spark.operators.similarity import cosine, l2_norm
+from udacity_data_engineering_spark.operators.pq import (
+    _evict_put,
+    _lloyd,
+    unit_sample,
+)
+from udacity_data_engineering_spark.operators.similarity import cosine
 from udacity_data_engineering_spark.plans.registry import register
 from udacity_data_engineering_spark.session import table
+
+
+def _center_distances(centers: np.ndarray) -> Column:
+    """Per row of ``emb_d``, the array ``|c_j|^2 - 2 x.c_j / max(|x|,
+    1e-12)`` over the k centres: squared euclidean distance from the
+    unit vector up to the row constant 1. The model is ONE array
+    literal (a per-element ``F.lit`` costs a py4j round trip each); the
+    norm is evaluated once per row via ``array_repeat`` — a norm inside
+    the lambda would be re-evaluated per centre (higher-order lambdas
+    get no subexpression elimination). The 1e-12 floor is
+    ``pq_encode``'s: an all-zero vector lands on the smallest centre
+    instead of dividing by zero."""
+
+    def arr(values) -> str:
+        return "array(" + ", ".join(f"{float(v)!r}D" for v in values) + ")"
+
+    model = "array(" + ", ".join(arr(c) for c in centers) + ")"
+    norm = "greatest(sqrt(aggregate(emb_d, 0D, (s, v) -> s + v * v)), 1e-12D)"
+    dots = (
+        f"transform({model}, c -> "
+        "aggregate(zip_with(emb_d, c, (a, b) -> a * b), 0D, (s, v) -> s + v))"
+    )
+    return F.expr(
+        f"zip_with({arr((centers ** 2).sum(1))}, "
+        f"zip_with({dots}, array_repeat({norm}, {len(centers)}), "
+        "(dot, n) -> dot / n), (cn, u) -> cn - 2 * u)"
+    )
 
 
 def ivf_assign(
@@ -42,42 +82,38 @@ def ivf_assign(
     seed: int = 7,
     max_iter: int = 8,
 ):
-    """Train seeded k-means on L2-normalized vectors and assign every row
-    to its nearest centroid.
+    """Train seeded Lloyd k-means on a bounded sample of L2-normalized
+    vectors and assign every non-null row to its nearest centroid.
 
     Returns ``(assigned, centers)``: the input plus ``emb_d`` (the
-    double-cast vector) and ``cluster`` columns, and the centroid list
-    (k × dim Python floats — model metadata, driver-sized by design).
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
+    double-cast vector) and ``cluster`` (int) columns, and the centroid
+    list (k × dim Python floats — model metadata, driver-sized by
+    design). NULL embeddings are dropped: a row without a vector has no
+    cluster, and dedup/ANN semantics only apply to rows that have one.
+    An empty input (a partition-pruned-to-nothing relation is routine
+    at scale) gives an empty assignment and no centroids.
 
-    emb_d = F.col(vec_col).cast("array<double>")
-    unit = F.transform(emb_d, lambda x: x / l2_norm(emb_d))
-    # a NULL embedding cannot be clustered — drop it here (KMeans.fit
-    # throws on null feature vectors); dedup/ANN semantics over vectors
-    # only ever apply to rows that have one
-    prepped = (
-        emb.filter(F.col(vec_col).isNotNull())
-        .withColumn("emb_d", emb_d)
-        .withColumn("_features", array_to_vector(unit))
+    Cost: the sample's two actions; the assignment is lazy, one pass with
+    the input's partitioning. Ties go to the lowest centre id, as numpy
+    ``argmin``."""
+    prepped = emb.filter(F.col(vec_col).isNotNull()).withColumn(
+        "emb_d", F.col(vec_col).cast("array<double>")
     )
-    # empty relation (a partition-pruned-to-nothing input is routine at
-    # scale): KMeans.fit throws on zero rows — the correct result is an
-    # empty assignment and no centroids, not a crash. isEmpty() is one
-    # read-until-first-row job, noise next to fit()'s max_iter full
-    # passes; acceptable on the non-empty path too.
-    if prepped.isEmpty():
-        return prepped.drop("_features").withColumn(
-            "cluster", F.lit(0).cast("int")
-        ), []
-    model = KMeans(
-        k=k, seed=seed, maxIter=max_iter, featuresCol="_features",
-        predictionCol="cluster",
-    ).fit(prepped)
-    assigned = model.transform(prepped).drop("_features")
-    centers = [[float(x) for x in c] for c in model.clusterCenters()]
-    return assigned, centers
+    sample = unit_sample(emb, vec_col, seed=seed)
+    if not len(sample):
+        return prepped.withColumn("cluster", F.lit(0).cast("int")), []
+    centers = _lloyd(sample, k, seed=seed, iters=max_iter)
+    # the distance array is a column of its own so it is computed once,
+    # not once for array_min and again for array_position
+    assigned = (
+        prepped.withColumn("_d", _center_distances(centers))
+        .withColumn(
+            "cluster",
+            (F.array_position("_d", F.array_min("_d")) - 1).cast("int"),
+        )
+        .drop("_d")
+    )
+    return assigned, centers.tolist()
 
 
 def _probe_ids(query_vec: list[float], centers: list[list[float]], nprobe: int) -> list[int]:
@@ -101,8 +137,8 @@ def ivf_topk(
     n_clusters: int = 16,
     # Default operating point picked off the committed recall curve
     # (RECALL.md; same treatment PQ's rerank got in round 6): nprobe=8
-    # of 16 lists reads recall@10 0.796 on the uniform-random worst
-    # case vs 0.576 at 4, for linearly-proportional scan cost (half the
+    # of 16 lists reads recall@10 0.768 on the uniform-random worst
+    # case vs 0.556 at 4, for linearly-proportional scan cost (half the
     # corpus here — at production k (thousands of lists over 100 TB)
     # nprobe/k stays a small fraction and the same curve logic applies:
     # spend on probes until the recall knee).
@@ -133,7 +169,7 @@ def ivf_topk(
 #: Built-once IVF indexes, keyed by (Spark application, sf_dir). An IVF
 #: index is amortized state by definition — train once, probe per query —
 #: so repeated q_ivf_topk calls in one session (bench reps, repeated
-#: searches) must not re-run the iterative k-means job. The cached
+#: searches) must not re-sample, re-train and re-assign. The cached
 #: assignment is |corpus| rows of (vec_id, emb_d, cluster). Capped at 2
 #: entries (FIFO + unpersist, see pq._evict_put) so storage memory is
 #: never pinned unboundedly across sf_dirs.
@@ -148,8 +184,6 @@ def cached_ivf_index(
     (IVF probes, semantic dedup)."""
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _IVF_INDEX:
-        from udacity_data_engineering_spark.operators.pq import _evict_put
-
         assigned, centers = ivf_assign(emb)
         _evict_put(_IVF_INDEX, key, (assigned.cache(), centers))
     return _IVF_INDEX[key]
@@ -159,7 +193,7 @@ def cached_ivf_index(
     "q_ivf_topk",
     doc="E12 scale path: IVF approximate top-10 neighbours of vec_id=0 — "
     "seeded k-means inverted lists (k=16), probe the 8 nearest lists "
-    "(the committed recall curve's knee: 0.796 vs 0.576 at 4), "
+    "(the committed recall curve's knee: 0.768 vs 0.556 at 4), "
     "exact cosine verification inside them (~8/16 of the corpus "
     "scanned). The index is built once per (session, sf_dir) and cached "
     "— the query path measures probing, as in production. Iterative "

@@ -11,7 +11,7 @@ guided a user to the union):
   the whole space, recall 0.888 on the uniform-random worst case;
 - semantic/clustered: SemDeDup within-cluster pairs
   (semdedup.semantic_pairs) — cheap, catches the co-clustered mass,
-  misses cross-cluster pairs by design (standalone recall 0.300).
+  misses cross-cluster pairs by design (standalone recall 0.279).
 
 Every leg is exact-verified before the union, so ensemble precision
 stays 1.0 against its own thresholds while the union recall dominates
@@ -354,7 +354,7 @@ def ensemble_survivors(
     ">=0.4, reusing the session's cached IVF clustering), deduplicated "
     "on the pair key with a methods column. The composition RECALL.md "
     "recommends: each leg's misses are another leg's operating regime "
-    "(SemDeDup alone: 0.300 vs the cosine truth; the ensemble's "
+    "(SemDeDup alone: 0.279 vs the cosine truth; the ensemble's "
     "semantic recall dominates the best single leg). "
     "Hash/seed-specific bucketing => rows-only; measured recall in "
     "RECALL.md with floors in tests/test_recall_floors.py.",

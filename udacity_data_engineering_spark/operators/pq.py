@@ -66,35 +66,58 @@ def _lloyd(x: np.ndarray, k: int, seed: int, iters: int = 12) -> np.ndarray:
     return centers
 
 
+#: Rows in the bounded driver-side training sample shared by the PQ
+#: codebooks and the IVF centroids (``ann.ivf_assign``).
+SAMPLE_N = 20000
+
+
+def unit_sample(
+    emb: DataFrame,
+    vec_col: str = "embedding",
+    dim: int = 0,
+    sample_n: int = SAMPLE_N,
+    seed: int = 7,
+) -> np.ndarray:
+    """A seeded sample of at most ``sample_n`` non-null vectors,
+    L2-normalized, as an (n, dim) float64 matrix — the training input
+    of both ANN trainers. An empty sample is an empty (0, dim) matrix.
+
+    A real sample, not a scan-order prefix: oversample 4x by fraction
+    (seeded, drawn across all partitions) then trim to sample_n — a
+    leading-slice "sample" of a source/time-ordered lake would train on
+    one source's embeddings only. Two actions: the count and the
+    bounded collect."""
+    n = emb.count()
+    frac = min(1.0, (4.0 * sample_n) / max(n, 1))
+    rows = (
+        emb.select(F.col(vec_col).cast("array<double>").alias("e"))
+        .filter(F.col("e").isNotNull())  # a null vector trains nothing
+        .sample(fraction=frac, seed=seed)
+        .limit(sample_n)
+        .collect()
+    )
+    if not rows:
+        return np.empty((0, dim), dtype=np.float64)
+    mat = np.array([r.e for r in rows], dtype=np.float64)
+    return mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
+
+
 def pq_train(
     emb: DataFrame,
     vec_col: str = "embedding",
     m: int = 8,
     k: int = 16,
     dim: int = 64,
-    sample_n: int = 20000,
+    sample_n: int = SAMPLE_N,
     seed: int = 7,
 ) -> list[list[list[float]]]:
     """Train per-subspace codebooks on a bounded, seeded sample of
-    unit-normalized vectors. Returns an (m, k, dim/m) nested list —
-    model metadata small enough to fold into query plans as literals."""
+    unit-normalized vectors (``unit_sample``). Returns an (m, k, dim/m)
+    nested list — model metadata small enough to fold into query plans
+    as literals."""
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
-    # A real sample, not a scan-order prefix: oversample 4x by fraction
-    # (seeded, drawn across all partitions) then trim to sample_n —
-    # a leading-slice "sample" of a source/time-ordered lake would train
-    # codebooks on one source's embeddings only.
-    n = emb.count()
-    frac = min(1.0, (4.0 * sample_n) / max(n, 1))
-    sample = (
-        emb.select(F.col(vec_col).cast("array<double>").alias("e"))
-        .filter(F.col("e").isNotNull())  # null vectors can't train codebooks
-        .sample(fraction=frac, seed=seed)
-        .limit(sample_n)
-        .collect()
-    )
-    mat = np.array([r.e for r in sample], dtype=np.float64)
-    mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
+    mat = unit_sample(emb, vec_col, dim=dim, sample_n=sample_n, seed=seed)
     dsub = dim // m
     return [
         _lloyd(mat[:, i * dsub : (i + 1) * dsub], k, seed=seed + i).tolist()
@@ -230,6 +253,19 @@ def _evict_put(cache: dict, key, value, cap: int = 2) -> None:
     cache[key] = value
 
 
+def cached_pq_index(
+    spark: SparkSession, sf_dir: str, emb: DataFrame
+) -> tuple[DataFrame, list[list[list[float]]]]:
+    """The session's amortized PQ index (default m/k/seed) for this
+    sf_dir — codebooks trained and the corpus encoded once, shared by
+    every PQ consumer (q_pq_topk, its exhaustive leg, IVF-PQ)."""
+    key = (spark.sparkContext.applicationId, sf_dir)
+    if key not in _PQ_INDEX:
+        books = pq_train(emb)
+        _evict_put(_PQ_INDEX, key, (pq_encode(emb, books).cache(), books))
+    return _PQ_INDEX[key]
+
+
 @register(
     "q_pq_topk",
     doc="E12 compressed-domain scale path: product-quantization top-10 "
@@ -247,11 +283,7 @@ def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     head = emb.filter(F.col("vec_id") == 0).select("embedding").head()
     if head is None or head.embedding is None:
         return spark.createDataFrame([], "vec_id long, cos_sim double")
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PQ_INDEX:
-        books = pq_train(emb)
-        _evict_put(_PQ_INDEX, key, (pq_encode(emb, books).cache(), books))
-    encoded, books = _PQ_INDEX[key]
+    encoded, books = cached_pq_index(spark, sf_dir, emb)
     qvec = [float(x) for x in head.embedding]
     return pq_topk(encoded, emb, qvec, codebooks=books, exclude_vec_id=0)
 
@@ -286,11 +318,7 @@ def q_pq_topk_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
     head = emb.filter(F.col("vec_id") == 0).select("embedding").head()
     if head is None or head.embedding is None:
         return spark.createDataFrame([], "vec_id long, cos_sim double")
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PQ_INDEX:
-        books = pq_train(emb)
-        _evict_put(_PQ_INDEX, key, (pq_encode(emb, books).cache(), books))
-    encoded, books = _PQ_INDEX[key]
+    encoded, books = cached_pq_index(spark, sf_dir, emb)
     qvec = [float(x) for x in head.embedding]
     n = emb.count()  # bounded driver scalar: rerank knob, not data
     return pq_topk(
@@ -349,17 +377,12 @@ def ivfpq_topk(
 )
 def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from udacity_data_engineering_spark.operators.ann import cached_ivf_index
-    from udacity_data_engineering_spark.session import table as _table
 
-    emb = _table(spark, sf_dir, "embeddings")
+    emb = table(spark, sf_dir, "embeddings")
     head = emb.filter(F.col("vec_id") == 0).select("embedding").head()
     if head is None or head.embedding is None:
         return spark.createDataFrame([], "vec_id long, cos_sim double")
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PQ_INDEX:
-        books = pq_train(emb)
-        _evict_put(_PQ_INDEX, key, (pq_encode(emb, books).cache(), books))
-    encoded, books = _PQ_INDEX[key]
+    encoded, books = cached_pq_index(spark, sf_dir, emb)
     assigned, centers = cached_ivf_index(spark, sf_dir, emb)
     qvec = [float(x) for x in head.embedding]
     return ivfpq_topk(
