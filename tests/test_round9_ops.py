@@ -358,9 +358,10 @@ def test_scrub_keeps_one_occurrence_and_splices_others(spark):
     d2 = _mkdoc([f"z{i}" for i in range(5)] + block)
     d3 = _mkdoc(["solo"] * 25)        # no cross-doc dup, passes through
     docs = spark.createDataFrame(
-        [(1, d1), (2, d2), (3, d3)], "doc_id long, text string"
+        [(1, d1), (2, d2), (3, d3), (4, None)], "doc_id long, text string"
     )
     got = {r.doc_id: r for r in scrub_duplicate_spans(docs).collect()}
+    assert set(got) == {1, 2, 3}                      # null text dropped
     assert got[1].scrubbed == d1                      # keeper untouched
     assert got[1].n_removed == 0
     assert got[2].scrubbed == " ".join([f"z{i}" for i in range(5)])

@@ -241,3 +241,28 @@ def test_dump_kill_switch_routes_to_stock(monkeypatch):
     table, n = _dump_rows(dump_patched, _dump_serializer(), items)
     assert n == 41  # stock one-batch-per-emission shape
     assert table.num_rows == 42
+
+
+def test_dump_never_merges_frames_with_different_columns():
+    """A kernel frame whose columns differ from the frames buffered
+    before it is converted on its own: a misnamed column must fail the
+    way stock's per-frame conversion fails, not come out as NaN-filled
+    rows of one concatenated frame."""
+    _stock_and_patched()
+    dump_patched = ser_mod.TransformWithStateInPandasSerializer.dump_stream
+    dump_stock = dump_patched._uds_stock
+    arrow_type = pa.struct(
+        [pa.field("user_id", pa.int64()), pa.field("score", pa.float64())]
+    )
+
+    def items():
+        frames = [
+            pd.DataFrame({"user_id": [1], "score": [0.5]}),
+            pd.DataFrame({"user_id": [2], "scroe": [1.5]}),  # kernel bug
+        ]
+        return [[(iter([f]), arrow_type)] for f in frames]
+
+    with pytest.raises(Exception) as stock_err:
+        _dump_rows(dump_stock, _dump_serializer(), items())
+    with pytest.raises(type(stock_err.value)):
+        _dump_rows(dump_patched, _dump_serializer(), items())

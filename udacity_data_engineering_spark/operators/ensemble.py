@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from udacity_data_engineering_spark.operators.ann import cached_ivf_index
 from udacity_data_engineering_spark.operators.neardup import (
     NEARDUP_THRESHOLD,
     embedding_neardup_lsh,
@@ -47,7 +48,7 @@ from udacity_data_engineering_spark.operators.similarity import (
     jaccard_verified_pairs,
 )
 from udacity_data_engineering_spark.plans.registry import register
-from udacity_data_engineering_spark.session import table
+from udacity_data_engineering_spark.session import session_cached, table
 
 
 def _leg_frames(
@@ -139,46 +140,37 @@ def _leg_frames(
     return legs
 
 
-#: Per-(application, sf_dir) cache of the ensemble's shared building
-#: blocks: the identical-content collapse table, verified rep-level
-#: lexical pairs, star edges, and the two embedding legs — all
-#: localCheckpointed. q_neardup_ensemble and q_ensemble_survivors run
-#: back-to-back in a bench/driver session over the SAME corpus and were
-#: each recomputing every leg (~8 s of the survivor query's round-10
-#: bench row was leg recomputation). Same FIFO eviction posture as the
-#: cached IVF index (pq._evict_put) so nothing pins storage unboundedly.
-_ENSEMBLE_STATE: dict = {}
-
-
 def cached_ensemble_state(
     spark: SparkSession, sf_dir: str
 ) -> dict[str, DataFrame]:
     """The session's shared ensemble legs for ``sf_dir`` (default
-    thresholds — the registered queries' operating point)."""
-    from udacity_data_engineering_spark.operators.ann import (
-        cached_ivf_index,
-    )
+    thresholds — the registered queries' operating point): the
+    identical-content collapse table, verified rep-level lexical pairs,
+    star edges, and the two embedding legs — all localCheckpointed.
+    q_neardup_ensemble and q_ensemble_survivors run back-to-back in a
+    benchmark session over the SAME corpus and were each recomputing
+    every leg (~8 s of the survivor query's round-10 bench row was leg
+    recomputation). The IVF assignment the SemDeDup leg is built from is
+    NOT part of the state: it belongs to ``cached_ivf_index``'s entry,
+    and evicting this one must not unpersist it."""
     from udacity_data_engineering_spark.operators.components import (
         star_edges,
     )
-    from udacity_data_engineering_spark.operators.pq import _evict_put
     from udacity_data_engineering_spark.operators.similarity import (
         content_reps,
         fingerprint_members,
         rep_verified_pairs,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ENSEMBLE_STATE:
+    def build():
         docs = table(spark, sf_dir, "documents")
         emb = table(spark, sf_dir, "embeddings")
         assigned, _ = cached_ivf_index(spark, sf_dir, emb)
         members = fingerprint_members(docs).localCheckpoint()
         reps = content_reps(docs, members)
-        state = {
+        return {
             "docs": docs,
             "embeddings": emb,
-            "assigned": assigned,
             "members": members,
             "rep_pairs": rep_verified_pairs(reps, 0.5).localCheckpoint(),
             "stars": star_edges(members).localCheckpoint(),
@@ -192,8 +184,8 @@ def cached_ensemble_state(
             # must run at the same point or rebuild (ADVICE r11)
             "operating_point": (0.5, NEARDUP_THRESHOLD, False),
         }
-        _evict_put(_ENSEMBLE_STATE, key, state)
-    return _ENSEMBLE_STATE[key]
+
+    return session_cached(spark, sf_dir, "ensemble_state", build)
 
 
 def _check_operating_point(
@@ -362,8 +354,9 @@ def ensemble_survivors(
 )
 def q_neardup_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     st = cached_ensemble_state(spark, sf_dir)
+    assigned, _ = cached_ivf_index(spark, sf_dir, st["embeddings"])
     return neardup_ensemble(
-        st["docs"], st["embeddings"], assigned=st["assigned"], state=st
+        st["docs"], st["embeddings"], assigned=assigned, state=st
     )
 
 
@@ -383,6 +376,7 @@ def q_neardup_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_ensemble_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     st = cached_ensemble_state(spark, sf_dir)
+    assigned, _ = cached_ivf_index(spark, sf_dir, st["embeddings"])
     return ensemble_survivors(
-        st["docs"], st["embeddings"], assigned=st["assigned"], state=st
+        st["docs"], st["embeddings"], assigned=assigned, state=st
     )

@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from udacity_data_engineering_spark.plans.registry import register
-from udacity_data_engineering_spark.session import table
+from udacity_data_engineering_spark.session import session_cached, table
 
 #: damping factor and round count shared by the Spark path and the
 #: generated oracle — change in one place only.
@@ -407,42 +407,28 @@ def read_click_edges(spark: SparkSession, lake_dir: str) -> DataFrame:
     )
 
 
-#: Built-once click-edge lakes, keyed by (application, sf_dir) — the
-#: cached_ivf_index posture: the lake is amortized state by definition
-#: (built once per ingest batch, read per query), so repeated
-#: q_pagerank_persisted calls in one session (bench reps, driver +
-#: verifier) must not rebuild it. FIFO-capped at 2 entries; evicted
-#: lakes are rmtree'd (the value is a scratch directory, not a DataFrame).
-_EDGE_LAKES: dict = {}
-
-
 def cached_edge_lake(spark: SparkSession, sf_dir: str) -> str:
     """The session's built-once click-edge lake for ``sf_dir``:
     bootstrap from the historic users (user_id % 5 != 0), then one
     incremental append batch for the rest — whole user streams per
-    batch, the lake contract."""
+    batch, the lake contract. The lake is amortized state (built once
+    per ingest batch, read per query), so repeated q_pagerank_persisted
+    calls in one session (bench reps, query plus verification) must not
+    rebuild it; the session cache rmtree's an evicted lake directory."""
+    import hashlib
     import os
-    import shutil
+    from pathlib import Path
 
     from udacity_data_engineering_spark.sources.parquet_source import (
         scratch_dir,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _EDGE_LAKES:
-        # FIFO cap like pq._evict_put, but the cached value is a
-        # DIRECTORY path, not a cached DataFrame — evict by rmtree
-        while len(_EDGE_LAKES) >= 2:
-            shutil.rmtree(
-                _EDGE_LAKES.pop(next(iter(_EDGE_LAKES))), ignore_errors=True
-            )
+    def build() -> Path:
         # distinct dir per sf_dir: scratch_dir is per-NAME, and two
         # sf_dirs cached at once must not share one lake directory —
         # keyed by a hash of the FULL normalized path (two sf_dirs can
         # share a basename; eviction rmtree also invalidates any lazy
         # frames previously read from the evicted lake)
-        import hashlib
-
         norm = os.path.normpath(os.path.abspath(sf_dir))
         lake_dir = os.path.join(
             scratch_dir("click_edge_lake"),
@@ -453,8 +439,9 @@ def cached_edge_lake(spark: SparkSession, sf_dir: str) -> str:
         click_edge_lake(
             spark, lake_dir, ev.filter(F.col("user_id") % 5 == 0), append=True
         )
-        _EDGE_LAKES[key] = lake_dir
-    return _EDGE_LAKES[key]
+        return Path(lake_dir)
+
+    return str(session_cached(spark, sf_dir, "edge_lake", build))
 
 
 @register(

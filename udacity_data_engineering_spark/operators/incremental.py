@@ -30,7 +30,7 @@ from udacity_data_engineering_spark.operators.dedup import (
     keep_first,
 )
 from udacity_data_engineering_spark.plans.registry import register
-from udacity_data_engineering_spark.session import table
+from udacity_data_engineering_spark.session import session_cached, table
 
 
 def incremental_dedup(
@@ -419,45 +419,25 @@ def incremental_simhash(
     return bb.unionByName(cross).distinct()
 
 
-#: Built-once lake index state, keyed by (application, sf_dir): the
-#: MinHash band table, the fingerprint lake, and the SimHash band index
-#: are PERSISTED write-once state by contract ("never re-shingle the
-#: accumulated corpus") — repeated q_incremental_* calls in one session
-#: (bench reps, driver + verifier) must probe the same built state, not
-#: rebuild lake-sized indexes per invocation. Same FIFO posture as
-#: pq._evict_put (localCheckpointed frames, cap 2).
-_LAKE_STATE: dict = {}
-
-
 def _cached_lake_state(spark: SparkSession, sf_dir: str) -> dict:
-    from udacity_data_engineering_spark.operators.pq import _evict_put
-    from udacity_data_engineering_spark.session import table as _table
+    """The session's built-once lake index state for ``sf_dir``: the
+    MinHash band table, the fingerprint lake, and the SimHash band index
+    are PERSISTED write-once state by contract ("never re-shingle the
+    accumulated corpus") — repeated q_incremental_* calls in one session
+    (bench reps, query plus verification) must probe the same built
+    state, not rebuild lake-sized indexes per invocation."""
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _LAKE_STATE:
-        lake = _table(spark, sf_dir, "documents").filter(
+    def build():
+        lake = table(spark, sf_dir, "documents").filter(
             F.col("doc_id") % 2 == 0
         )
-        state = {
+        return {
             "minhash": minhash_lake_index(lake).localCheckpoint(),
             "fps": fingerprint_ids(lake).localCheckpoint(),
             "simhash": simhash_lake_index(lake).localCheckpoint(),
         }
-        # _evict_put expects (df, meta) tuples; store a 2-tuple whose
-        # first element carries an unpersistable handle
-        class _H:
-            def __init__(self, frames):
-                self.frames = frames
 
-            def unpersist(self):
-                for f in self.frames:
-                    try:
-                        f.unpersist()
-                    except Exception:
-                        pass
-
-        _evict_put(_LAKE_STATE, key, (_H(list(state.values())), state))
-    return _LAKE_STATE[key][1]
+    return session_cached(spark, sf_dir, "lake_state", build)
 
 
 @register(

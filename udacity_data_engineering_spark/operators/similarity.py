@@ -99,13 +99,6 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def token_sets(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Distinct (doc_id, token) pairs — an inverted index."""
-    return docs.select(
-        id_col, F.explode(F.split(F.col(text_col), " ")).alias("w")
-    ).distinct()
-
-
 def shingle_sets(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
 ) -> DataFrame:

@@ -505,8 +505,12 @@ def scrub_duplicate_spans(
             )
         ).alias("__cov")
     )
-    base = spread(docs).select(
-        "doc_id", F.split(F.col("text"), " ").alias("__w")
+    # a null-text doc has no spans and no scrubbed text: drop it, as the
+    # oracle does (split(NULL) would emit a (doc_id, NULL, NULL, '') row)
+    base = (
+        spread(docs)
+        .filter(F.col("text").isNotNull())
+        .select("doc_id", F.split(F.col("text"), " ").alias("__w"))
     )
     pos = F.sequence(F.lit(1), F.size("__w"))
     # covered starts never exceed len - n + 1, so __cov stays within

@@ -161,6 +161,14 @@ def ensure_tws_runtime(spark) -> bool:
       PythonFunctions capture) so the SDK's possibly-foreign-ABI C
       extension is never loaded.
 
+    It also ships ``uds_tws_serializer_patch.py``. The kernels'
+    ``__setstate__`` hook calls its ``install()``, which patches
+    ``TransformWithStateInPandasSerializer`` for the whole worker
+    process: every TWS query that process serves gets the vectorized
+    load and coalesced dump, not just this package's kernels.
+    SPARK_GRAFT_TWS_VECTORIZED=0 / SPARK_GRAFT_TWS_COALESCE=0 in the
+    worker environment restore the stock paths.
+
     Returns False when even the shim has no runtime to bridge to (no
     SDK install) — callers surface that as an actionable error.
     """

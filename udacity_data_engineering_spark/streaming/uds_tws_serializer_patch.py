@@ -167,7 +167,8 @@ def _make_dump_stream(stock_dump_stream, parent_dump_stream):
     per output batch in stock pyspark) — so buffering consecutive
     frames up to ``arrow_max_records_per_batch`` rows and converting
     once preserves every row in order while collapsing the per-emission
-    boundary cost. SPARK_GRAFT_TWS_COALESCE=0 restores the stock
+    boundary cost. Only frames with identical column lists are merged.
+    SPARK_GRAFT_TWS_COALESCE=0 restores the stock
     one-batch-per-emission path (A/B lever / kill-switch)."""
     import os
 
@@ -181,13 +182,20 @@ def _make_dump_stream(stock_dump_stream, parent_dump_stream):
             buf: list = []
             buf_rows = 0
             cur_type = None
+            cur_cols = None
             for packed in iterator:
                 iter_pdf_with_type = packed[0]
                 iter_pdf = iter_pdf_with_type[0]
                 pdf_type = iter_pdf_with_type[1]
                 for pdf in iter_pdf:
+                    cols = list(pdf.columns)
+                    # a frame whose columns differ from the buffered ones
+                    # is never concatenated with them: concat would
+                    # NaN-fill the gaps and hide a kernel schema bug that
+                    # stock's per-frame conversion reports as an error
                     if buf and (
                         pdf_type is not cur_type
+                        or cols != cur_cols
                         or buf_rows + len(pdf) > limit
                     ):
                         yield (
@@ -201,6 +209,7 @@ def _make_dump_stream(stock_dump_stream, parent_dump_stream):
                     buf.append(pdf)
                     buf_rows += len(pdf)
                     cur_type = pdf_type
+                    cur_cols = cols
             if buf:
                 yield (
                     pd.concat(buf, ignore_index=True)
