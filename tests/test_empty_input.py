@@ -135,3 +135,27 @@ def test_line_serializer_preserves_null_positions(spark):
     back = read_lines_parsed(spark, out, df.schema)
     got = {tuple(r) for r in back.collect()}
     assert got == {(1, None, "c"), (2, "b", None)}
+
+
+def test_profile_counts_zero_nulls_on_empty_input(spark, empty_dir):
+    """q_profile on the empty copy: 0 nulls and 0 distinct per column, as
+    its oracle's ``count(*) - count(c)`` gives (a sum of null flags over
+    zero rows is NULL)."""
+    rows = all_queries()["q_profile"].fn(spark, empty_dir).collect()
+    cols = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate"]
+    assert sorted(tuple(r) for r in rows) == sorted((c, 0, 0) for c in cols)
+
+
+def test_profile_counts_nulls_and_distincts(spark):
+    from udacity_data_engineering_spark.operators.quality import profile
+
+    df = spark.createDataFrame(
+        [(1, None), (1, "x"), (None, "y"), (2, None)], "a int, b string"
+    )
+    out = profile(df)
+    assert [f.dataType.simpleString() for f in out.schema.fields] == [
+        "string",
+        "bigint",
+        "bigint",
+    ]
+    assert sorted(tuple(r) for r in out.collect()) == [("a", 1, 2), ("b", 2, 2)]

@@ -174,6 +174,15 @@ def test_kill_switch_routes_to_stock(monkeypatch):
         assert sizes_a == sizes_b
 
 
+def test_install_succeeds_on_pinned_pyspark():
+    """pyspark 4.1.2's stock serializer is the vetted one, so the patch
+    must install here, not fall back to stock silently."""
+    assert uds_tws_serializer_patch.install() is True
+    cls = ser_mod.TransformWithStateInPandasSerializer
+    assert cls.load_stream._uds_vectorized
+    assert cls.dump_stream._uds_vectorized
+
+
 def test_install_is_idempotent():
     assert uds_tws_serializer_patch.install()
     first = ser_mod.TransformWithStateInPandasSerializer.load_stream

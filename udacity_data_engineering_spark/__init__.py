@@ -20,3 +20,7 @@ from udacity_data_engineering_spark.session import (  # noqa: F401
     load_tables,
     table,
 )
+from udacity_data_engineering_spark import zip_stamp
+
+# a no-op outside PySpark Python workers; see zip_stamp
+zip_stamp.install()

@@ -351,11 +351,15 @@ def profile(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     column, one row per column. Single pass over the data: every metric
     is computed in ONE aggregate (2 x |cols| expressions), then the
     scalar row is unpivoted driver-free with stack(). The audit every
-    ingestion pipeline runs before trusting a feed."""
+    ingestion pipeline runs before trusting a feed.
+
+    ``n_nulls`` is ``count(*) - count(c)``, so an empty input profiles
+    as 0 nulls and 0 distinct per column (a sum over zero rows would be
+    NULL)."""
     cols = cols or df.columns
     aggs = []
     for c in cols:
-        aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"__n_{c}"))
+        aggs.append((F.count(F.lit(1)) - F.count(F.col(c))).alias(f"__n_{c}"))
         aggs.append(F.count_distinct(F.col(c)).alias(f"__d_{c}"))
     one = df.agg(*aggs)
     stack_args = ", ".join(f"'{c}', __n_{c}, __d_{c}" for c in cols)
