@@ -667,3 +667,28 @@ def test_edge_lake_stream_restart_does_not_double_count(spark, tmp_path):
     all_events = f1.unionByName(f2).unionByName(f3)
     want = sorted(tuple(r) for r in click_edges(all_events).collect())
     assert got == want
+
+
+def test_feed_state_partitions_sizes_from_visible_feed_bytes(spark, tmp_path, monkeypatch):
+    """One state partition per STATE_PARTITION_BYTES of staged feed,
+    floored at 1, capped at the session's shuffle partitions; `_`/`.`
+    files (commit markers, checksums) are not feed; a remote URI keeps
+    the session setting."""
+    from udacity_data_engineering_spark.streaming import event_stream
+
+    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    feed = tmp_path / "feed"
+    (feed / "day=1").mkdir(parents=True)
+    (feed / "day=1" / "part-0.parquet").write_bytes(b"x" * 100)
+    assert event_stream.feed_state_partitions(spark, str(feed)) == 1
+
+    monkeypatch.setattr(event_stream, "STATE_PARTITION_BYTES", 40)
+    assert event_stream.feed_state_partitions(spark, str(feed)) == 3
+    (feed / "_SUCCESS").write_bytes(b"x" * 1000)
+    (feed / "day=1" / ".part-0.parquet.crc").write_bytes(b"x" * 1000)
+    assert event_stream.feed_state_partitions(spark, str(feed)) == 3
+
+    monkeypatch.setattr(event_stream, "STATE_PARTITION_BYTES", 1)
+    assert session_parts < 100
+    assert event_stream.feed_state_partitions(spark, str(feed)) == session_parts
+    assert event_stream.feed_state_partitions(spark, "s3a://bucket/feed") == session_parts

@@ -481,8 +481,7 @@ def scrub_duplicate_spans(
     collect_list) that this formulation removes outright; nothing
     word-level is ever shuffled now, and the only per-word work is the
     one split every formulation needs. Measured same-session: the
-    word-level tail was ~half the query's warm wall
-    (scripts/scrub_profile_r16.py; OPTIMIZATION_r16.md)."""
+    word-level tail was ~half the query's warm wall (OPTIMIZATION_r16.md)."""
     spans = span_position_fingerprints(docs, n=n)
     keepers = spans.groupBy("fp").agg(
         F.min("doc_id").alias("__keeper"),

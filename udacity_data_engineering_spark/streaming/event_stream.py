@@ -325,9 +325,11 @@ def sessionized_counts(
     )
 
 
-def feed_state_partitions(
-    spark: SparkSession, feed_dir: str, target_bytes: int = 64 << 20
-) -> int:
+#: Staged feed bytes per shuffle/state partition of a bounded replay.
+STATE_PARTITION_BYTES = 64 << 20
+
+
+def feed_state_partitions(spark: SparkSession, feed_dir: str) -> int:
     """Scale-ADAPTIVE shuffle/state partition count for a staged bounded
     feed (optimization guide §2: derive partitioning from input size, not
     a constant tuned for either local mode or the cluster).
@@ -339,18 +341,15 @@ def feed_state_partitions(
     open/commit that many state stores (RocksDB instances, Python
     state-server round-trips for transformWithState) regardless of data
     volume. This is the streaming analog of AQE's advisory sizing: one
-    partition per ``target_bytes`` of staged feed, floored at 1 and
-    capped at the session's configured ``spark.sql.shuffle.partitions``
-    (a 100 TB feed keeps the cluster's setting; a KB-scale replay gets
-    1). ``SPARK_GRAFT_STREAM_STATE_PARTS`` overrides for operators that
-    know their key cardinality. Remote feed URIs (not os.walk-able)
-    return the session setting unchanged."""
+    partition per ``STATE_PARTITION_BYTES`` of staged feed (files whose
+    names start with ``_`` or ``.`` not counted), floored at 1 and capped
+    at the session's configured ``spark.sql.shuffle.partitions`` (a
+    100 TB feed keeps the cluster's setting; a KB-scale replay gets 1).
+    Remote feed URIs (not os.walk-able) return the session setting
+    unchanged."""
     import os as _os
 
-    override = _os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTS")
     cur = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    if override:
-        return max(1, int(override))
     if "://" in feed_dir or not _os.path.isdir(feed_dir):
         return cur
     size = 0
@@ -361,7 +360,7 @@ def feed_state_partitions(
                     size += _os.path.getsize(_os.path.join(dirpath, fn))
                 except OSError:
                     pass
-    return max(1, min(cur, -(-size // target_bytes)))
+    return max(1, min(cur, -(-size // STATE_PARTITION_BYTES)))
 
 
 class scoped_shuffle_partitions:
@@ -390,14 +389,6 @@ class scoped_shuffle_partitions:
             self.spark.conf.set(self.KEY, self._prev)
 
 
-#: Most recent StreamingQuery executed by run_available_now — an
-#: observability hook for measurement scripts (per-batch recentProgress
-#: breakdown, guide §1). The query object is already retained by the
-#: session's StreamingQueryManager until GC; keeping one reference adds
-#: nothing to the hot path.
-LAST_QUERY = None
-
-
 def run_available_now(
     stream_df: DataFrame,
     sink_table: str,
@@ -421,8 +412,6 @@ def run_available_now(
         .start()
     )
     q.awaitTermination()
-    global LAST_QUERY
-    LAST_QUERY = q
     record_streaming_plan(sink_table, q)
 
 
