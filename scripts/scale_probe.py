@@ -754,7 +754,7 @@ def main() -> None:
                 .select(
                     F.lit(0).cast("long").alias("query_id"),
                     F.col("vec_id").alias("doc_id"),
-                    F.round(cosine(F.col("v"), F.col("qv")), 6).alias("rel"),
+                    F.round(cosine("v", "qv"), 6).alias("rel"),
                     "v",
                 )
                 .orderBy(F.col("rel").desc(), "doc_id")
@@ -885,7 +885,7 @@ def main() -> None:
             )
             dense = embd.crossJoin(F.broadcast(qv)).select(
                 "vec_id",
-                F.round(cosine(F.col("emb_d"), F.col("q_emb")), 6).alias("cs"),
+                F.round(cosine("emb_d", "q_emb"), 6).alias("cs"),
             )
             return rrf_fuse(
                 [(lex, "doc_id", "bm25"), (dense, "vec_id", "cs")]

@@ -136,3 +136,15 @@ def test_ivf_index_build_job_budget(spark, job_tasks):
         assigned.cache().count()
     assigned.unpersist()
     assert len(tasks) == 8, tasks
+
+
+@pytest.mark.parametrize("name, jobs", [("q_ivf_topk", 2), ("q_pq_topk", 3), ("q_ivfpq_topk", 4)])
+def test_warm_probe_job_budget(spark, sf_dir, job_tasks, name, jobs):
+    """A warm probe (indexes built, table schema known) runs the vec-0
+    ``head()`` and the collect's jobs only. Inferring the embeddings
+    schema on every ``table()`` load cost one more job each."""
+    fn = all_queries()[name].fn
+    fn(spark, sf_dir).collect()
+    with job_tasks() as tasks:
+        fn(spark, sf_dir).collect()
+    assert len(tasks) == jobs, tasks

@@ -6,10 +6,13 @@ embeddings (out-of-regime floor), and the compression contract
 from __future__ import annotations
 
 import random
+import struct
 
+import numpy as np
 from pyspark.sql import functions as F
 
 from udacity_data_engineering_spark.operators.pq import (
+    adc_score,
     pq_encode,
     pq_topk,
     pq_train,
@@ -66,6 +69,29 @@ def test_pq_overlap_vs_brute_force(spark, sf_dir):
     exact = {r.vec_id for r in qs["q_cosine_topk"].fn(spark, sf_dir).collect()}
     approx = {r.vec_id for r in qs["q_pq_topk"].fn(spark, sf_dir).collect()}
     assert len(exact & approx) >= 5
+
+
+def test_adc_expr_equals_column_lambda_fold(spark):
+    """The one-``F.expr`` ADC score gives the same doubles, bit for bit,
+    as the per-element ``F.lit`` + Column-lambda fold it replaces
+    (written out here as the reference)."""
+    rng = np.random.default_rng(5)
+    m, k = 8, 16
+    lut = rng.normal(size=(m, k))
+    lut_col = F.array(*[F.lit(float(v)) for v in lut.ravel()])
+    old = F.aggregate(
+        F.transform(
+            F.col("codes"),
+            lambda c, i: F.element_at(lut_col, (i * k + c + 1).cast("int")),
+        ),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    rows = [(rng.integers(0, k, size=m).tolist(),) for _ in range(1000)]
+    got = spark.createDataFrame(rows, "codes array<int>").select(adc_score(lut), old).collect()
+    assert len(got) == 1000
+    for new, ref in got:
+        assert struct.pack("<d", new) == struct.pack("<d", ref)
 
 
 def test_pq_adc_scan_has_no_python_eval(spark):

@@ -4,12 +4,17 @@ accuracy, tokenizers."""
 
 from __future__ import annotations
 
+import struct
+
 import numpy as np
 from pyspark.sql import functions as F
 
 from udacity_data_engineering_spark.operators.asof import asof_join
 from udacity_data_engineering_spark.operators.similarity import (
     cosine,
+    dot,
+    double_array_sql,
+    l2_norm,
     minhash_candidates,
     shingles,
 )
@@ -21,10 +26,52 @@ def test_cosine_matches_numpy(spark):
     a, b = rng.normal(size=16).tolist(), rng.normal(size=16).tolist()
     df = spark.createDataFrame(
         [(a, b)], "a array<double>, b array<double>"
-    ).select(cosine(F.col("a"), F.col("b")).alias("c"))
+    ).select(cosine("a", "b").alias("c"))
     got = df.collect()[0].c
     want = float(np.dot(a, b) / (np.linalg.norm(a) * np.linalg.norm(b)))
     assert abs(got - want) < 1e-12
+
+
+def _bits(values):
+    return [struct.pack("<d", v) for v in values]
+
+
+def test_double_array_literal_round_trips_bit_for_bit(spark):
+    v = [0.1, -0.0, 5e-324, 1.7976931348623157e308, float("nan"), float("inf"), float("-inf")]
+    row = spark.range(1).select(
+        F.expr(double_array_sql(v)).alias("sql"), F.array(*map(F.lit, v)).alias("lit")
+    ).head()
+    assert _bits(row.sql) == _bits(row.lit) == _bits(v)
+
+
+def test_sql_text_folds_equal_column_lambda_folds(spark):
+    """The folds as SQL text give the same doubles, bit for bit, as the
+    Column-lambda form they replace (written out here as the reference)."""
+
+    def old_dot(a, b):
+        return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
+
+    def old_norm(a):
+        return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
+
+    rng = np.random.default_rng(11)
+    rows = [
+        (rng.normal(size=64).tolist(), (rng.normal(size=64) * rng.uniform(1e-3, 1e3)).tolist())
+        for _ in range(1000)
+    ]
+    a, b = F.col("a"), F.col("b")
+    got = (
+        spark.createDataFrame(rows, "a array<double>, b array<double>")
+        .select(
+            dot("a", "b"), old_dot(a, b),
+            l2_norm("a"), old_norm(a),
+            cosine("a", "b"), old_dot(a, b) / (old_norm(a) * old_norm(b)),
+        )
+        .collect()
+    )
+    assert len(got) == 1000
+    for r in got:
+        assert _bits(r[0::2]) == _bits(r[1::2])
 
 
 def _jaccard(x: str, y: str, n: int = 3) -> float:

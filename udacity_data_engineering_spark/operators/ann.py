@@ -39,7 +39,10 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from udacity_data_engineering_spark.operators.pq import lloyd, unit_sample
-from udacity_data_engineering_spark.operators.similarity import cosine
+from udacity_data_engineering_spark.operators.similarity import (
+    cosine,
+    double_array_sql,
+)
 from udacity_data_engineering_spark.plans.registry import register
 from udacity_data_engineering_spark.session import session_cached, table
 
@@ -54,18 +57,14 @@ def _center_distances(centers: np.ndarray) -> Column:
     get no subexpression elimination). The 1e-12 floor is
     ``pq_encode``'s: an all-zero vector lands on the smallest centre
     instead of dividing by zero."""
-
-    def arr(values) -> str:
-        return "array(" + ", ".join(f"{float(v)!r}D" for v in values) + ")"
-
-    model = "array(" + ", ".join(arr(c) for c in centers) + ")"
+    model = "array(" + ", ".join(map(double_array_sql, centers)) + ")"
     norm = "greatest(sqrt(aggregate(emb_d, 0D, (s, v) -> s + v * v)), 1e-12D)"
     dots = (
         f"transform({model}, c -> "
         "aggregate(zip_with(emb_d, c, (a, b) -> a * b), 0D, (s, v) -> s + v))"
     )
     return F.expr(
-        f"zip_with({arr((centers ** 2).sum(1))}, "
+        f"zip_with({double_array_sql((centers ** 2).sum(1))}, "
         f"zip_with({dots}, array_repeat({norm}, {len(centers)}), "
         "(dot, n) -> dot / n), (cn, u) -> cn - 2 * u)"
     )
@@ -149,13 +148,13 @@ def ivf_topk(
     probed per query."""
     assigned, centers = index if index is not None else ivf_assign(emb, k=n_clusters)
     probes = _probe_ids(query_vec, centers, nprobe)
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
     cand = assigned.filter(F.col("cluster").isin(probes))
     if exclude_vec_id is not None:
         cand = cand.filter(F.col("vec_id") != exclude_vec_id)
     return (
         cand.select(
-            "vec_id", F.round(cosine(F.col("emb_d"), q), 6).alias("cos_sim")
+            "vec_id",
+            F.round(cosine("emb_d", double_array_sql(query_vec)), 6).alias("cos_sim"),
         )
         .orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
         .limit(k_neighbors)

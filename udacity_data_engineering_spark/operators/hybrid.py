@@ -149,7 +149,7 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(q))
         .select(
             "vec_id",
-            F.round(cosine(F.col("emb_d"), F.col("q_emb")), 6).alias("cs"),
+            F.round(cosine("emb_d", "q_emb"), 6).alias("cs"),
         )
     )
     fused = rrf_fuse([(lexical, "doc_id", "bm25"), (dense, "vec_id", "cs")])

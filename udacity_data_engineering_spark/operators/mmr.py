@@ -164,7 +164,7 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.lit(0).cast("long").alias("query_id"),
             F.col("vec_id").alias("doc_id"),
-            F.round(cosine(F.col("v"), F.col("qv")), 6).alias("rel"),
+            F.round(cosine("v", "qv"), 6).alias("rel"),
             "v",
         )
         .orderBy(F.col("rel").desc(), "doc_id")

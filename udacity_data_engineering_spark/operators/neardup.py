@@ -562,7 +562,7 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "q_embedding_neardup_lsh",
     ).select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
     a, b = emb.alias("a"), emb.alias("b")
-    sim = cosine(F.col("a.e"), F.col("b.e"))
+    sim = cosine("a.e", "b.e")
     return (
         a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
         .select(
@@ -602,7 +602,7 @@ def _lsh_bucketed(
     emb = spread(embeddings.filter(F.col("embedding").isNotNull())).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )
-    unit = emb.select("vec_id", "e", l2_norm(F.col("e")).alias("nrm")).select(
+    unit = emb.select("vec_id", "e", l2_norm("e").alias("nrm")).select(
         "vec_id", F.transform("e", lambda x: x / F.col("nrm")).alias("u")
     )
     return unit.select(

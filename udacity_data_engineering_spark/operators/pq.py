@@ -37,11 +37,14 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, IntegerType
 
-from udacity_data_engineering_spark.operators.similarity import cosine
+from udacity_data_engineering_spark.operators.similarity import (
+    cosine,
+    double_array_sql,
+)
 from udacity_data_engineering_spark.plans.registry import register
 from udacity_data_engineering_spark.session import session_cached, table
 
@@ -154,6 +157,17 @@ def pq_encode(
     )
 
 
+def adc_score(lut: np.ndarray) -> Column:
+    """The ADC approximate cosine of each row's ``codes``: the sum over
+    subspaces i of ``lut[i, codes[i]]``, one ``F.expr`` with the (m, k)
+    table as a single array literal."""
+    k = lut.shape[1]
+    return F.expr(
+        f"aggregate(transform(codes, (c, i) -> element_at({double_array_sql(lut.ravel())}, "
+        f"CAST(i * {k} + c + 1 AS INT))), 0D, (acc, x) -> acc + x)"
+    )
+
+
 def pq_topk(
     encoded: DataFrame,
     emb: DataFrame,
@@ -177,33 +191,24 @@ def pq_topk(
     count itself. Drop it back toward 50 only when queries are batched
     so densely that the re-rank join dominates the scan."""
     books = [np.asarray(b, dtype=np.float64) for b in codebooks]
-    m, k = len(books), books[0].shape[0]
     dsub = books[0].shape[1]
     q = np.asarray(query_vec, dtype=np.float64)
     q = q / max(np.linalg.norm(q), 1e-12)
     # lut[i, j] = q_sub_i . codeword_ij  -> approx cosine = sum of lookups
     lut = np.vstack(
-        [q[i * dsub : (i + 1) * dsub] @ books[i].T for i in range(m)]
-    )
-    lut_col = F.array(*[F.lit(float(v)) for v in lut.ravel()])
-    adc = F.aggregate(
-        F.transform(
-            F.col("codes"),
-            lambda c, i: F.element_at(lut_col, (i * k + c + 1).cast("int")),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+        [q[i * dsub : (i + 1) * dsub] @ books[i].T for i in range(len(books))]
     )
     cand = encoded
     if exclude_vec_id is not None:
         cand = cand.filter(F.col("vec_id") != exclude_vec_id)
     finalists = (
-        cand.select("vec_id", adc.alias("adc_score"))
+        cand.select("vec_id", adc_score(lut).alias("adc_score"))
         .orderBy(F.col("adc_score").desc(), F.col("vec_id"))
         .limit(rerank)
     )
-    qcol = F.array(*[F.lit(float(x)) for x in query_vec])
-    exact = F.round(cosine(F.col(vec_col).cast("array<double>"), qcol), 6)
+    exact = F.round(
+        cosine(f"CAST({vec_col} AS ARRAY<DOUBLE>)", double_array_sql(query_vec)), 6
+    )
     return (
         finalists.join(emb, "vec_id")
         .select("vec_id", exact.alias("cos_sim"))

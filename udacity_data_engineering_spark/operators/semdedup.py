@@ -78,7 +78,7 @@ def semantic_pairs(
     # Norm computed ONCE per row: a norm inside the transform lambda
     # would re-evaluate the O(d) aggregate per element (higher-order
     # lambdas get no subexpression elimination) — O(d^2) per row.
-    unit = assigned.withColumn("nrm", l2_norm(F.col("emb_d"))).select(
+    unit = assigned.withColumn("nrm", l2_norm("emb_d")).select(
         "vec_id",
         "cluster",
         F.transform("emb_d", lambda x: x / F.col("nrm")).alias("u"),

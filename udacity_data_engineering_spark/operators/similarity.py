@@ -25,6 +25,7 @@ minhash_signature). No row-at-a-time Python anywhere.
 
 from __future__ import annotations
 
+import math
 import random
 
 import numpy as np
@@ -40,21 +41,47 @@ from udacity_data_engineering_spark.session import table
 # ---------------------------------------------------------------------------
 # vector math (JVM-side, deterministic left-to-right folds)
 # ---------------------------------------------------------------------------
+# The folds take SQL expression text (a column name such as ``"emb_d"``
+# or a ``double_array_sql`` literal) and return ONE ``F.expr``: a Column
+# lambda or ``F.lit`` per element costs a py4j round trip each while the
+# query is built.
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Dot product of two array<double> columns via zip_with + fold."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
+def _double_sql(v: float) -> str:
+    v = float(v)
+    if math.isfinite(v):
+        return f"{v!r}D"  # repr round-trips; Spark parses it exactly
+    # repr(nan) is 'nan', not SQL: spell non-finite values as exact casts
+    word = "NaN" if v != v else ("Infinity" if v > 0 else "-Infinity")
+    return f"CAST('{word}' AS DOUBLE)"
 
 
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
+def double_array_sql(values) -> str:
+    """``values`` as one SQL ``array<double>`` literal, bit for bit the
+    array ``F.array(*map(F.lit, values))`` builds (NaN and infinities
+    included)."""
+    return "array(" + ", ".join(map(_double_sql, values)) + ")"
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
+def _dot_sql(a: str, b: str) -> str:
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
+
+
+def _norm_sql(a: str) -> str:
+    return f"sqrt(aggregate({a}, 0D, (acc, x) -> acc + x * x))"
+
+
+def dot(a: str, b: str) -> Column:
+    """Dot product of two array<double> expressions via zip_with + fold."""
+    return F.expr(_dot_sql(a, b))
+
+
+def l2_norm(a: str) -> Column:
+    return F.expr(_norm_sql(a))
+
+
+def cosine(a: str, b: str) -> Column:
+    return F.expr(f"{_dot_sql(a, b)} / ({_norm_sql(a)} * {_norm_sql(b)})")
 
 
 @register(
@@ -87,7 +114,7 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(q))
         .select(
             "vec_id",
-            F.round(cosine(F.col("emb_d"), F.col("q_emb")), 6).alias("cos_sim"),
+            F.round(cosine("emb_d", "q_emb"), 6).alias("cos_sim"),
         )
         .orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
         .limit(10)

@@ -13,6 +13,10 @@ needs for the driver's testdata (see SURVEY.md §7.2):
 - UTC session timezone everywhere (deterministic date parts, oracle parity).
 - AQE on (runtime coalesce / skew-join handling — the 100 TB posture).
 
+``table`` infers each Parquet table's schema once per application and
+reads later loads with it declared (see ``_read_parquet``): stock
+inference runs a one-task Spark job per ``spark.read.parquet`` call.
+
 All confs are runtime-settable so they also work on a session we did not
 build (the driver hands us its own ``SparkSession``).
 """
@@ -24,9 +28,11 @@ import shutil
 from collections.abc import Callable
 from pathlib import Path
 from typing import Any, TypeVar
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 #: Tables the driver generates at /root/testdata/sf*/ (TESTDATA.md).
 TABLES = (
@@ -269,6 +275,8 @@ def build_session(
         .config("spark.sql.sources.parallelPartitionDiscovery.parallelism", str(cpus))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
+        # no `[Stage N:>` bars: scripts on this session log to files
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # catalog-table writes (bucketed tables) land in /tmp, not the
         # repo; per-process dir so stale files from a previous session
@@ -305,7 +313,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     MILLIS/NTZ timestamps already arrive.
     """
     configure(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # FLOOR to micros (DIV truncates toward zero — wrong for pre-1970
         # sub-microsecond nanos), matching how the timestamp[us] vintage
@@ -317,6 +325,61 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 "THEN -1 ELSE 0 END) AS TIMESTAMP_NTZ)"
             ),
         )
+    return df
+
+
+#: Parquet schemas ``_read_parquet`` inferred: (Spark application id,
+#: path) -> (files stamp, schema).
+_SCHEMAS: dict[tuple[str, str], tuple[tuple, StructType]] = {}
+
+
+def _raise(err: OSError) -> None:
+    raise err
+
+
+def _files_stamp(path: str) -> tuple | None:
+    """Sorted ``(path, size, mtime_ns)`` of the local file ``path`` or of
+    every file below the local directory ``path`` (a superset of what
+    Spark lists: hidden and ``_``-prefixed files count too). None for a
+    URI with a scheme (``s3a://``, ``file:``) and for a path that cannot
+    be listed or stat'ed: such a path has no stamp."""
+    if urlsplit(path).scheme:
+        return None
+    try:
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return ((path, st.st_size, st.st_mtime_ns),)
+        files = []
+        for root, _dirs, names in os.walk(path, onerror=_raise, followlinks=True):
+            for n in names:
+                f = os.path.join(root, n)
+                fst = os.stat(f)
+                files.append((f, fst.st_size, fst.st_mtime_ns))
+        return tuple(sorted(files))
+    except OSError:
+        return None
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the schema only when this
+    application has not seen ``path`` with the same files stamp.
+
+    Stock inference runs a one-task Spark job that reads a footer
+    (``mergeSchemasInParallel``); a declared schema reads none. The
+    first load infers and stores the schema under the files stamp taken
+    before it; a later load whose stamp matches reads with
+    ``spark.read.schema(s)``. A changed, added or removed file changes
+    the stamp and re-infers, and a path without a stamp (a non-local
+    URI, an ``OSError``) always infers, as stock. Each call builds a new
+    relation, so two loads never share attribute ids."""
+    key = (spark.sparkContext.applicationId, path)
+    stamp = _files_stamp(path)
+    hit = _SCHEMAS.get(key)
+    if stamp is not None and hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if stamp is not None:
+        _SCHEMAS[key] = (stamp, df.schema)
     return df
 
 
