@@ -1,9 +1,12 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
+The driver's verify runs ``entry(spark)`` as a smoke check, runs the
+first 50 ``queries()`` entries at sf=0.01 and compares each against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+order-insensitive value-hash → CORRECTNESS_r{N}.json). Those 50 are
+``registry.driver_window()``, computed from the CORRECTNESS_r*.json
+history: six parity anchors, then the oracled queries whose newest green
+driver hash is oldest.
 
 All real logic lives in the ``udacity_data_engineering_spark`` package;
 this module just exposes its declared-query registry

@@ -10,18 +10,18 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from udacity_data_engineering_spark.plans.registry import (
-    DRIVER_PRIORITY,
     all_queries,
+    driver_window,
 )
 
 
-def _driver_checked_names(repo: Path) -> set[str]:
+def _driver_checked_names(repo: Path, manifest: dict) -> set[str]:
     """Names that have ever appeared in a driver correctness window
     (union of CORRECTNESS_r*.json keys) plus the names scheduled in the
-    CURRENT window (DRIVER_PRIORITY — they get checked this round)."""
+    current window (``driver_window`` — they get checked next)."""
     import json
 
-    seen: set[str] = set(DRIVER_PRIORITY)
+    seen: set[str] = set(driver_window(manifest))
     for p in sorted(repo.glob("CORRECTNESS_r*.json")):
         try:
             seen |= set(json.loads(p.read_text()))
@@ -44,7 +44,7 @@ def main() -> None:
     args = ap.parse_args()
     manifest = all_queries()
     repo = Path(__file__).resolve().parents[1]
-    checked = _driver_checked_names(repo)
+    checked = _driver_checked_names(repo, manifest)
     rows_only = sorted(n for n, q in manifest.items() if not q.oracle)
     never = sorted(
         n for n, q in manifest.items() if q.oracle and n not in checked
@@ -55,7 +55,7 @@ def main() -> None:
         + (f" ({', '.join(never)})" if never else "")
         + f"; rows-only by design: {len(rows_only)}. "
         "('checked' = appeared in any CORRECTNESS_r*.json window or "
-        "scheduled in the current DRIVER_PRIORITY window.)"
+        "scheduled in the current driver window.)"
     )
     lines = [
         "# INVENTORY — declared-query manifest",

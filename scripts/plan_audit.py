@@ -1,8 +1,8 @@
 """Audit the physical plans of driver-window queries for scale hazards.
 
 Round 11 did this by hand; this makes it a per-round command. For every
-DRIVER_PRIORITY query (or a -q subset) it builds the DataFrame at the
-given sf_dir, renders ``explain('formatted')``, and flags:
+query in ``registry.driver_window`` (or a -q subset) it builds the
+DataFrame at the given sf_dir, renders ``explain('formatted')``, and flags:
 
 - ``Exchange SinglePartition`` — the 100 TB cliff: every row through one
   task (global windows, coalesce(1), global sorts). A bounded number of
@@ -39,8 +39,8 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from udacity_data_engineering_spark.plans.registry import (
-    DRIVER_PRIORITY,
     all_queries,
+    driver_window,
 )
 from udacity_data_engineering_spark.session import build_session
 
@@ -179,7 +179,7 @@ def main() -> int:
     spark = build_session(app_name="plan-audit")
     manifest = all_queries()
     wanted = [s for s in args.queries.split(",") if s] or list(
-        manifest if args.all else DRIVER_PRIORITY
+        manifest if args.all else driver_window(manifest)
     )
 
     from udacity_data_engineering_spark.streaming.event_stream import (

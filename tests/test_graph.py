@@ -75,15 +75,6 @@ def test_pagerank_conserves_mass_and_ranks_sink_highest(spark):
     assert got[3] > got[2]
 
 
-def test_pagerank_checkpoint_cadence_invariant(spark):
-    edges = {(1, 2): 3.0, (2, 1): 1.0, (2, 3): 2.0, (3, 3): 1.0}
-    nodes = [1, 2, 3]
-    e, n = _edges_df(spark, edges), _nodes_df(spark, nodes)
-    a = {r.page: r.pr for r in pagerank(e, n, checkpoint_every=1).collect()}
-    b = {r.page: r.pr for r in pagerank(e, n, checkpoint_every=4).collect()}
-    assert a == b  # lineage cuts are a physical choice, never semantic
-
-
 def test_click_edges_sessionized_per_user(spark):
     t = datetime(2024, 1, 1)
     rows = [

@@ -227,6 +227,25 @@ def test_media_dedup_finds_byte_identical_copy(spark):
     assert dupes[0].survivor_path.endswith("img_000.img")
 
 
+def test_queries_emit_file_names_not_checkout_paths(spark, sf_dir):
+    """Query rows carry media file names, so one commit gives the same rows
+    from any checkout directory; a name joined with MEDIA_DIR reopens it."""
+    from pathlib import Path
+
+    from udacity_data_engineering_spark.plans.registry import all_queries
+
+    qs = all_queries()
+    names = [n for n in qs if n.startswith("q_multimodal_")]
+    assert len(names) == 8
+    for name in names:
+        df = qs[name].fn(spark, sf_dir)
+        cols = [c for c in df.columns if "path" in c]
+        assert cols, name
+        for row in df.select(cols).collect():
+            for v in row:
+                assert "/" not in v and Path(MEDIA_DIR, v).is_file(), (name, v)
+
+
 def test_blob_oracles_handle_truncated_files(spark, tmp_path, monkeypatch):
     """The read_blob oracles must agree with the kernels on truncated
     (<8-byte header) files — the corrupt-crawl-artifact input class the

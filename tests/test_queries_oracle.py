@@ -14,27 +14,13 @@ from udacity_data_engineering_spark.testing import compare
 
 MANIFEST = all_queries()
 
-#: Parametrizations whose replay is expensive even at sf0.001 (measured
-#: >=8 s each in the round-16 duration census: the 8-round pagerank CTE
-#: unroll on the DuckDB side, the multi-batch streaming runs, the lake
-#: compaction lifecycle). Depth tier (round 16 driver-budget tiering):
-#: the pagerank pair and the five TWS names sit in the round-16
-#: DRIVER_PRIORITY window (the driver's own t2 gate oracle-checks them
-#: this round); q_edge_lake_compacted / q_bitmap_distinct_sparse /
-#: q_quality_ensemble carry green driver hashes from r14/r15 and keep
-#: their behavior tests in the default tier.
-SLOW_ORACLE = {
-    "q_pagerank",
-    "q_pagerank_persisted",
-    "q_streaming_stateful_liststate",
-    "q_streaming_stateful_mapstate",
-    "q_streaming_stateful_ttl",
-    "q_streaming_stateful_warmstart",
-    "q_streaming_stateful_totals_tws",
-    "q_edge_lake_compacted",
-    "q_bitmap_distinct_sparse",
-    "q_quality_ensemble",
-}
+#: Parametrizations whose replay is expensive even at sf0.001 (>=8 s each:
+#: the 8-round pagerank CTE unroll on the DuckDB side, the multi-batch
+#: streaming runs, the lake compaction lifecycle), tagged ``slow_oracle``
+#: at registration. The default tier leaves them to the driver's own oracle
+#: gate: tests/test_registry_order.py guards that each is in the driver
+#: window or holds a green driver hash at most 2 rounds old.
+SLOW_ORACLE = {n for n, q in MANIFEST.items() if "slow_oracle" in q.tags}
 
 
 @pytest.mark.parametrize(

@@ -32,6 +32,20 @@ def test_cosine_matches_numpy(spark):
     assert abs(got - want) < 1e-12
 
 
+def test_cosine_of_zero_vector_is_null(spark):
+    """A zero vector has no direction: NULL, not DIVIDE_BY_ZERO under ANSI."""
+    rows = (
+        spark.createDataFrame(
+            [([0.0, 0.0], [1.0, 2.0]), ([1.0, 2.0], [0.0, 0.0]), ([0.0, 0.0], [0.0, 0.0])],
+            "a array<double>, b array<double>",
+        )
+        .select(cosine("a", "b").alias("c"))
+        .collect()
+    )
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    assert [r.c for r in rows] == [None, None, None]
+
+
 def _bits(values):
     return [struct.pack("<d", v) for v in values]
 

@@ -38,13 +38,13 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from udacity_data_engineering_spark.operators.pq import lloyd, unit_sample
+from udacity_data_engineering_spark.operators.pq import lloyd, unit_sample, vec0_topk
 from udacity_data_engineering_spark.operators.similarity import (
     cosine,
     double_array_sql,
 )
 from udacity_data_engineering_spark.plans.registry import register
-from udacity_data_engineering_spark.session import session_cached, table
+from udacity_data_engineering_spark.session import session_cached
 
 
 def _center_distances(centers: np.ndarray) -> Column:
@@ -189,16 +189,10 @@ def cached_ivf_index(
     tags=("E12", "ann"),
 )
 def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = table(spark, sf_dir, "embeddings")
-    index = cached_ivf_index(spark, sf_dir, emb)
-    # the query vector is a parameter of the search, not data — one row
-    head = emb.filter(F.col("vec_id") == 0).select("embedding").head()
-    # empty/pruned-empty corpus, or the query row exists with a NULL
-    # embedding: top-k of nothing either way
-    if head is None or head.embedding is None:
-        return spark.createDataFrame([], "vec_id long, cos_sim double")
-    qvec = [float(x) for x in head.embedding]
-    return ivf_topk(emb, qvec, exclude_vec_id=0, index=index)
+    def search(emb: DataFrame, qvec: list[float]) -> DataFrame:
+        return ivf_topk(emb, qvec, exclude_vec_id=0, index=cached_ivf_index(spark, sf_dir, emb))
+
+    return vec0_topk(spark, sf_dir, search)
 
 
 @register(
@@ -227,13 +221,8 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("E12", "ann"),
 )
 def q_ivf_topk_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = table(spark, sf_dir, "embeddings")
-    index = cached_ivf_index(spark, sf_dir, emb)
-    head = emb.filter(F.col("vec_id") == 0).select("embedding").head()
-    if head is None or head.embedding is None:
-        return spark.createDataFrame([], "vec_id long, cos_sim double")
-    qvec = [float(x) for x in head.embedding]
-    n_lists = len(index[1])
-    return ivf_topk(
-        emb, qvec, exclude_vec_id=0, index=index, nprobe=n_lists
-    )
+    def search(emb: DataFrame, qvec: list[float]) -> DataFrame:
+        index = cached_ivf_index(spark, sf_dir, emb)
+        return ivf_topk(emb, qvec, exclude_vec_id=0, index=index, nprobe=len(index[1]))
+
+    return vec0_topk(spark, sf_dir, search)

@@ -221,7 +221,7 @@ def q_bitmap_distinct_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "so DuckDB rebuilds the identical cell BYTES: both the key service "
     "and the sketch are hash-proven as one fact. Shuffle bounded by "
     "groups x ceil(N/64) cells; the dictionary join is left to AQE.",
-    tags=("E1", "E2", "W+", "llm-pipeline", "sketch"),
+    tags=("E1", "E2", "W+", "llm-pipeline", "sketch", "slow_oracle"),
 )
 def q_bitmap_distinct_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os

@@ -144,7 +144,6 @@ def pagerank(
     dst: str = "dst",
     weight: str = "n_transitions",
     node: str = "page",
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Weighted PageRank with damping 0.85 over a fixed node set.
 
@@ -164,10 +163,9 @@ def pagerank(
     Each round's rank vector is cut with a LAZY localCheckpoint whose
     materialization is triggered by that round's dangling aggregate, so
     every round executes exactly once and schedules one job (plus AQE
-    query stages). ``checkpoint_every`` is retained for API
-    compatibility and ignored: per-round lazy cuts strictly dominate a
-    sparser eager cadence, which re-executed un-cut rounds up to three
-    times (round-15 optimization; measurements in OPTIMIZATION_r15.md).
+    query stages). Per-round lazy cuts strictly dominate a sparser eager
+    cadence, which re-executed un-cut rounds up to three times (round-15
+    optimization; measurements in OPTIMIZATION_r15.md).
     """
     from udacity_data_engineering_spark.operators.checkpointing import (
         loop_checkpoint,
@@ -331,7 +329,7 @@ def _pagerank_oracle(iters: int = PAGERANK_ITERS) -> str:
     "round. Hash-proven end-to-end: the DuckDB oracle replays the same "
     "8 rounds as unrolled chained CTEs (final ranks rounded 6dp; rank "
     "mass conserved at 1 by construction).",
-    tags=("E5", "analytics", "graph", "llm-pipeline"),
+    tags=("E5", "analytics", "graph", "llm-pipeline", "slow_oracle"),
 )
 def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events")
@@ -456,7 +454,7 @@ def cached_edge_lake(spark: SparkSession, sf_dir: str) -> str:
     "exactly and the result hash-proves against the SAME unrolled-CTE "
     "oracle as q_pagerank — extraction-once + append is a pure "
     "performance posture, not a semantics change.",
-    tags=("E5", "analytics", "graph", "llm-pipeline"),
+    tags=("E5", "analytics", "graph", "llm-pipeline", "slow_oracle"),
 )
 def q_pagerank_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     lake_dir = cached_edge_lake(spark, sf_dir)
@@ -562,7 +560,7 @@ def compact_edge_lake(
     "not data volume); this is the housekeeping op that keeps the "
     "append-only ingest path honest. File-count reduction is asserted "
     "in tests/test_graph.py.",
-    tags=("sources", "graph", "physical", "llm-pipeline"),
+    tags=("sources", "graph", "physical", "llm-pipeline", "slow_oracle"),
 )
 def q_edge_lake_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from udacity_data_engineering_spark.sources.parquet_source import (

@@ -19,7 +19,7 @@ import struct
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -173,6 +173,14 @@ def array_csv(col, fmt: str = "%d"):
     return F.concat_ws(",", F.transform(col, lambda x: F.format_string(fmt, x)))
 
 
+def file_name(path: str | Column) -> Column:
+    """The file name of a binaryFile ``path`` URI (its last segment).
+    Query outputs carry the name, never the checkout's directory, so one
+    commit gives the same rows from any checkout; the oracles spell it
+    ``parse_filename(filename)``."""
+    return F.element_at(F.split(path, "/"), -1)
+
+
 def read_media(spark: SparkSession, path: str | None = None) -> DataFrame:
     """binaryFile source: (path, modificationTime, length, content).
     Spark never parses the bytes — scans stay columnar and the payload
@@ -278,7 +286,7 @@ def _be_uint32(hx: str, start_byte: int) -> str:
           SELECT filename, v//32 AS bucket, count(*) AS c
           FROM byt GROUP BY filename, v//32
         )
-        SELECT m.filename AS path, m.n_bytes,
+        SELECT parse_filename(m.filename) AS path, m.n_bytes,
                CAST(CASE WHEN m.n_bytes >= 8
                     THEN {_be_uint32('m.hx', 0)} ELSE 0 END AS INT) AS width,
                CAST(CASE WHEN m.n_bytes >= 8
@@ -316,7 +324,7 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda x: F.floor(x.cast("double") * 1000000 + F.lit(0.5)).cast("bigint"),
     )
     return decoded.select(
-        F.regexp_replace("path", "^file:", "").alias("path"),
+        file_name("path").alias("path"),
         "n_bytes",
         "meta.width",
         "meta.height",
@@ -333,7 +341,7 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
                  hex(content) AS hx
           FROM read_blob('{MEDIA_DIR}/*.img')
         )
-        SELECT filename AS path,
+        SELECT parse_filename(filename) AS path,
                CAST(i AS INT) AS frame_id,
                CAST(((i+1)*L)//4 - (i*L)//4 AS INT) AS frame_len,
                lower(substr(hx, CAST(2*((i*L)//4) + 17 AS BIGINT),
@@ -352,7 +360,7 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     return frame_sample(read_media(spark)).select(
-        F.regexp_replace("path", "^file:", "").alias("path"),
+        file_name("path").alias("path"),
         "frame_id",
         F.length("frame").alias("frame_len"),
         F.lower(F.hex("frame")).alias("frame_hex"),
@@ -459,7 +467,7 @@ def audio_window_features(df: DataFrame, window: int = 64) -> DataFrame:
                  lower(hex(content)) AS hx
           FROM read_blob('{MEDIA_DIR}/*.img')
         )
-        SELECT m.filename AS path, CAST(m.L AS BIGINT) AS orig_len,
+        SELECT parse_filename(m.filename) AS path, CAST(m.L AS BIGINT) AS orig_len,
                string_agg(
                  CAST(CASE WHEN m.L = 0 THEN 0
                       ELSE {_byte_at('m.hx', '(t.i*m.L)//16 + 8')}
@@ -479,7 +487,7 @@ def audio_window_features(df: DataFrame, window: int = 64) -> DataFrame:
 )
 def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return resize_media(read_media(spark)).select(
-        F.regexp_replace("path", "^file:", "").alias("path"),
+        file_name("path").alias("path"),
         "orig_len",
         array_csv("resized", "%d").alias("resized_csv"),
     )
@@ -505,7 +513,7 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
                  lag(s) OVER (PARTITION BY filename, i//64 ORDER BY i) AS prev
           FROM byt
         )
-        SELECT filename AS path, window_id,
+        SELECT parse_filename(filename) AS path, window_id,
                CAST(floor(sqrt(avg(CAST(s*s AS DOUBLE))) * 1000000 + 0.5)
                     AS BIGINT) AS rms_micro,
                CAST(count(*) FILTER (
@@ -532,7 +540,7 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     audio = audio_window_features(read_media(spark))
     return audio.select(
-        F.regexp_replace("path", "^file:", "").alias("path"),
+        file_name("path").alias("path"),
         "window_id",
         F.floor(F.col("rms") * 1000000 + F.lit(0.5)).cast("bigint").alias("rms_micro"),
         "zero_crossings",
@@ -552,7 +560,7 @@ def frame_dedup(frames: DataFrame) -> DataFrame:
         .agg(
             F.min(
                 F.struct(
-                    F.regexp_replace("path", "^file:", "").alias("p"),
+                    file_name("path").alias("p"),
                     F.col("frame_id").alias("f"),
                 )
             ).alias("s"),
@@ -575,7 +583,7 @@ def shared_frame_pairs(frames: DataFrame) -> DataFrame:
     pairs are compared — the same candidate-pair shape as the text LSH
     paths, never file×file."""
     f = frames.select(
-        F.regexp_replace("path", "^file:", "").alias("p"),
+        file_name("path").alias("p"),
         F.sha2(F.col("frame"), 256).alias("__fp"),
     ).distinct()
     a, b = f.alias("a"), f.alias("b")
@@ -592,7 +600,7 @@ def shared_frame_pairs(frames: DataFrame) -> DataFrame:
 
 
 _FRAMES_SQL = f"""
-        SELECT m.filename AS path, CAST(i AS INT) AS frame_id,
+        SELECT parse_filename(m.filename) AS path, CAST(i AS INT) AS frame_id,
                lower(substr(hx, CAST(2*((i*L)//4) + 17 AS BIGINT),
                             CAST(2*(((i+1)*L)//4 - (i*L)//4) AS BIGINT)))
                    AS fh
@@ -676,7 +684,7 @@ def media_dedup(df: DataFrame) -> DataFrame:
 @register(
     "q_multimodal_dedup",
     oracle=f"""
-        SELECT min(filename) AS survivor_path,
+        SELECT min(parse_filename(filename)) AS survivor_path,
                CAST(count(*) AS BIGINT) AS n_copies
         FROM read_blob('{MEDIA_DIR}/*.img')
         GROUP BY content
@@ -692,7 +700,7 @@ def media_dedup(df: DataFrame) -> DataFrame:
 )
 def q_multimodal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return media_dedup(read_media(spark)).select(
-        F.regexp_replace("survivor_path", "^file:", "").alias("survivor_path"),
+        file_name("survivor_path").alias("survivor_path"),
         "n_copies",
     )
 
@@ -838,7 +846,7 @@ def q_multimodal_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     configure(spark)
     media = spark.read.format("binaryFile").load(f"{MEDIA_DIR}/*")
     return dhash_pairs(payload_dhash(media)).select(
-        F.element_at(F.split("path_a", "/"), -1).alias("path_a"),
-        F.element_at(F.split("path_b", "/"), -1).alias("path_b"),
+        file_name("path_a").alias("path_a"),
+        file_name("path_b").alias("path_b"),
         "hamming",
     )

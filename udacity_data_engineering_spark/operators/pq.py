@@ -35,6 +35,8 @@ baseline are asserted in tests/test_pq.py.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -168,6 +170,21 @@ def adc_score(lut: np.ndarray) -> Column:
     )
 
 
+def vec0_topk(
+    spark: SparkSession, sf_dir: str, search: Callable[[DataFrame, list[float]], DataFrame]
+) -> DataFrame:
+    """Run ``search(emb, qvec)`` for the neighbours of vec_id 0 over the
+    embeddings table. The query vector is a parameter of the search, not
+    data: one bounded ``head()`` brings it to the driver. An empty or
+    pruned-empty corpus, or a NULL vec-0 embedding, is top-k of nothing:
+    an empty ``(vec_id, cos_sim)`` frame, with no index built."""
+    emb = table(spark, sf_dir, "embeddings")
+    head = emb.filter(F.col("vec_id") == 0).select("embedding").head()
+    if head is None or head.embedding is None:
+        return spark.createDataFrame([], "vec_id long, cos_sim double")
+    return search(emb, [float(x) for x in head.embedding])
+
+
 def pq_topk(
     encoded: DataFrame,
     emb: DataFrame,
@@ -244,15 +261,11 @@ def cached_pq_index(
     tags=("E12", "ann"),
 )
 def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = table(spark, sf_dir, "embeddings")
-    # empty (or pruned-empty) corpus: nothing to train on and nothing to
-    # rank — top-k of nothing, not a vstack crash in codebook training
-    head = emb.filter(F.col("vec_id") == 0).select("embedding").head()
-    if head is None or head.embedding is None:
-        return spark.createDataFrame([], "vec_id long, cos_sim double")
-    encoded, books = cached_pq_index(spark, sf_dir, emb)
-    qvec = [float(x) for x in head.embedding]
-    return pq_topk(encoded, emb, qvec, codebooks=books, exclude_vec_id=0)
+    def search(emb: DataFrame, qvec: list[float]) -> DataFrame:
+        encoded, books = cached_pq_index(spark, sf_dir, emb)
+        return pq_topk(encoded, emb, qvec, codebooks=books, exclude_vec_id=0)
+
+    return vec0_topk(spark, sf_dir, search)
 
 
 @register(
@@ -281,16 +294,12 @@ def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("E12", "ann"),
 )
 def q_pq_topk_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = table(spark, sf_dir, "embeddings")
-    head = emb.filter(F.col("vec_id") == 0).select("embedding").head()
-    if head is None or head.embedding is None:
-        return spark.createDataFrame([], "vec_id long, cos_sim double")
-    encoded, books = cached_pq_index(spark, sf_dir, emb)
-    qvec = [float(x) for x in head.embedding]
-    n = emb.count()  # bounded driver scalar: rerank knob, not data
-    return pq_topk(
-        encoded, emb, qvec, codebooks=books, exclude_vec_id=0, rerank=n
-    )
+    def search(emb: DataFrame, qvec: list[float]) -> DataFrame:
+        encoded, books = cached_pq_index(spark, sf_dir, emb)
+        n = emb.count()  # bounded driver scalar: rerank knob, not data
+        return pq_topk(encoded, emb, qvec, codebooks=books, exclude_vec_id=0, rerank=n)
+
+    return vec0_topk(spark, sf_dir, search)
 
 
 def ivfpq_topk(
@@ -345,13 +354,9 @@ def ivfpq_topk(
 def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from udacity_data_engineering_spark.operators.ann import cached_ivf_index
 
-    emb = table(spark, sf_dir, "embeddings")
-    head = emb.filter(F.col("vec_id") == 0).select("embedding").head()
-    if head is None or head.embedding is None:
-        return spark.createDataFrame([], "vec_id long, cos_sim double")
-    encoded, books = cached_pq_index(spark, sf_dir, emb)
-    assigned, centers = cached_ivf_index(spark, sf_dir, emb)
-    qvec = [float(x) for x in head.embedding]
-    return ivfpq_topk(
-        encoded, emb, assigned, centers, qvec, codebooks=books, exclude_vec_id=0
-    )
+    def search(emb: DataFrame, qvec: list[float]) -> DataFrame:
+        encoded, books = cached_pq_index(spark, sf_dir, emb)
+        assigned, centers = cached_ivf_index(spark, sf_dir, emb)
+        return ivfpq_topk(encoded, emb, assigned, centers, qvec, codebooks=books, exclude_vec_id=0)
+
+    return vec0_topk(spark, sf_dir, search)

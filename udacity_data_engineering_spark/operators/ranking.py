@@ -370,7 +370,7 @@ def q_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     "score scales combine without magic thresholds; both ntiles run "
     "B-way parallel (no global window anywhere in a corpus-sized "
     "plan).",
-    tags=("E10", "llm-pipeline", "quality", "ranking", "corpus"),
+    tags=("E10", "llm-pipeline", "quality", "ranking", "corpus", "slow_oracle"),
 )
 def q_quality_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     from udacity_data_engineering_spark.operators.charlm import charlm_score

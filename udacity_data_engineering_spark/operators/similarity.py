@@ -81,7 +81,16 @@ def l2_norm(a: str) -> Column:
 
 
 def cosine(a: str, b: str) -> Column:
-    return F.expr(f"{_dot_sql(a, b)} / ({_norm_sql(a)} * {_norm_sql(b)})")
+    """Cosine similarity of two array<double> expressions.
+
+    Null contract: a zero vector has no direction, so its cosine is NULL
+    (the divisor is ``nullif(norm_a * norm_b, 0)``: no ``DIVIDE_BY_ZERO``
+    under ANSI); a NULL array gives NULL. Every nonzero pair is the plain
+    ``dot / (norm_a * norm_b)`` fold, bit for bit. DuckDB's
+    ``list_cosine_similarity`` returns -1.0 for a zero vector instead, so
+    an oracle over zero vectors must spell that case as NULL.
+    """
+    return F.expr(f"{_dot_sql(a, b)} / nullif({_norm_sql(a)} * {_norm_sql(b)}, 0)")
 
 
 @register(

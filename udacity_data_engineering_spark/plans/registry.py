@@ -5,7 +5,10 @@ itself here as a named query: a Spark callable ``(spark, sf_dir) ->
 DataFrame`` plus (when SQL-expressible) the equivalent DuckDB oracle SQL.
 ``__spark_entry__.py`` exposes this registry verbatim to the driver, which
 hash-compares both sides at sf0.01 (row count + schema + order-insensitive
-value hash).
+value hash) for the FIRST 50 entries and records them in
+``CORRECTNESS_r{N}.json``. ``all_queries()`` puts ``driver_window()`` first,
+which computes those 50 names from that history; every other query keeps
+its module-import registration order after them.
 
 Matching rules baked in from SURVEY.md §5: identical output column aliases
 on both sides; float aggregates rounded on both sides; Spark ``dayofweek``
@@ -15,8 +18,10 @@ query; oracle integer results cast to the width Spark produces.
 
 from __future__ import annotations
 
+import json
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -51,107 +56,73 @@ def register(
     return deco
 
 
-# Driver-facing manifest order. The driver's correctness window checks the
-# FIRST 50 entries in insertion order, so the front of this list must cover
-# every SURVEY §2A parity operator plus at least one query per §2B extension
-# family; everything not listed keeps its module-import registration order
-# after these. A name listed here but not registered is a hard error (catches
-# renames going stale).
-DRIVER_PRIORITY: tuple[str, ...] = (
-    # Round-16 rotation (executes the queue recorded in the r15 ledger,
-    # plus the round-16 optimization re-proofs): six §2A parity anchors;
-    # the FOURTEEN queries whose implementation changed in the r16
-    # optimization round (charlm single-pass reformulation, TWS kernel
-    # RPC folding + feed batching, outer-join state scoping, foreachBatch
-    # batch-count cuts, pagerank loop_checkpoint) so their fresh hashes
-    # land the same round; the four rows-only names deferred from r15;
-    # the r6-stale batch (newest driver record round 5/6); the twelve
-    # family anchors rotated out in r15 (restores E3/E4/E9/... window
-    # coverage — the r15 window plus CORRECTNESS_r15 left E3 uncovered,
-    # which tests/test_registry_order.py caught at round-16 start); one
-    # E12 oracled anchor; and the five stalest r7 names.
-    "q_scan_count",  # 2A.6 parquet scan + 2A.22 count
-    "q_dateparts",  # 2A.14/11/13 datetime parts + events nanos shim
-    "q_join_multikey",  # 2A.17 3-key composite equi-join
-    "q_sql_entry",  # 2A.15/16/18 temp view + SQL + aliasing
-    "q_parquet_partitioned",  # 2A.20 hive sink + pruned re-read
-    "q_sparkify_songplays_nat",  # the reference's whole program, hash-proven
-    # --- changed in the r16 optimization round: re-prove same round ---
-    "q_charlm_score",  # single-pass counted-explosion reformulation
-    "q_charlm_by_lang",
-    "q_charlm_lang_filter",
-    "q_streaming_stateful_ttl",  # TWS RPC folding + 3-bucket feed
-    "q_streaming_stateful_mapstate",
-    "q_streaming_stateful_liststate",
-    "q_streaming_stateful_warmstart",
-    "q_streaming_stateful_totals_tws",
-    "q_streaming_stateful_totals",
-    "q_streaming_outer_join",  # feed-scoped state partitions
-    "q_streaming_lake_upsert",  # 2 micro-batches
-    "q_streaming_dq_monitor",
-    "q_streaming_edge_lake",
-    "q_pagerank",  # loop_checkpoint wrapper on the iteration cuts
-    # --- rows-only, deferred from r15 (VERDICT r14 item 7) ---
-    "q_sample",
-    "q_sparkify_songplays",
-    "q_sequence_packing",
-    "q_sketch_rollup",
-    # --- stalest re-proofs: newest driver record round 5/6 ---
-    "q_tumbling_agg",
-    "q_asof_forward",
-    "q_limit",
-    "q_parquet_roundtrip",
-    "q_project",
-    "q_salted_agg",
-    "q_scan_glob",
-    "q_text_tokens",
-    "q_vocab_topk",
-    # --- family anchors rotated out in r15 (all driver-proven r14) ---
-    "q_parts_supplier_cnt",
-    "q_rollup",
-    "q_topn",
-    "q_setops",
-    "q_json_extract",
-    "q_window_rank",
-    "q_stratified_fixed_k",
-    "q_session_window",
-    "q_doc_dedup",
-    "q_cluster_centroids",
-    "q_multimodal_decode",
-    "q_ngram_jaccard",  # E12 oracled anchor (oracle_only ground truth)
-    # --- next-stalest batch (round 7) ---
-    "q_doc_chunks",
-    "q_incremental_dedup",
-    "q_math_funcs",
-    "q_null_handling",
-    "q_pack_offsets",
+#: The SURVEY §2A parity anchors that lead every driver window: scan and
+#: count, datetime parts with the events nanos shim, a composite-key join,
+#: the SQL entry surface, the partitioned sink, and the reference's whole
+#: program. The only window names kept by hand.
+ANCHORS: tuple[str, ...] = (
+    "q_scan_count",
+    "q_dateparts",
+    "q_join_multikey",
+    "q_sql_entry",
+    "q_parquet_partitioned",
+    "q_sparkify_songplays_nat",
 )
-# Rotation ledger after this window: every family E1-E15 + physical/
-# sampling/corpus/embeddings is covered IN-WINDOW (not just via history);
-# never-windowed rows-only names down from 4 to 0. r17 queue:
-# (a) the remaining r7-stale names (q_ngram_counts, q_sliding_window,
-# q_string_funcs, q_temperature_mix) and the r8 batch
-# (q_curation_pipeline, q_dedup_best_survivors, q_knn_join,
-# q_length_bucket_batches, q_stratified_mix, q_streaming_session,
-# q_substring_doc_flags, q_substring_dupes_winnowed, q_token_budget_mix);
-# (b) the family anchors rotated out in r16 (q_bitmap_distinct_sparse,
-# q_file_skipping_combined, q_bloom_join, q_drift_psi, q_setops_all,
-# q_recursive_cte, q_event_paths, q_surrogate_keys, the csv/orc/compact
-# trio, the 14 TPC-H shapes, the r5 batch — all driver-proven r15).
+
+#: Family tags: each keeps a member in the window or green in the newest
+#: CORRECTNESS file, so no family goes unproven two windows in a row.
+FAMILIES: tuple[str, ...] = (
+    *(f"E{i}" for i in range(1, 16)),
+    "physical",
+    "sampling",
+    "corpus",
+    "embeddings",
+)
+
+#: Where the driver writes its ``CORRECTNESS_r{N}.json`` records.
+REPO = Path(__file__).resolve().parents[2]
+
+
+def driver_window(queries: dict[str, Query]) -> list[str]:
+    """The 50 names the driver's correctness window checks next.
+
+    Computed from the ``CORRECTNESS_r*.json`` history: the anchors; every
+    ``slow_oracle`` query whose newest green (``hash_match``) record is more
+    than 2 rounds older than the newest file; for each family with no member
+    green in the newest file, its stalest member; then the remaining oracled
+    queries by (newest green round, name), never-green as round 0. Rows-only
+    queries are never in the window. Without any history the order is by name.
+    """
+    green: dict[str, int] = {}
+    newest = 0
+    for p in REPO.glob("CORRECTNESS_r*.json"):
+        rnd = int(p.stem.removeprefix("CORRECTNESS_r"))
+        newest = max(newest, rnd)
+        for n, rec in json.loads(p.read_text()).items():
+            if rec.get("hash_match"):
+                green[n] = max(green.get(n, 0), rnd)
+    oracled = sorted((n for n, q in queries.items() if q.oracle), key=lambda n: (green.get(n, 0), n))
+    window = dict.fromkeys(ANCHORS)
+    window.update(
+        dict.fromkeys(n for n in oracled if "slow_oracle" in queries[n].tags and newest - green.get(n, 0) > 2)
+    )
+    for family in FAMILIES:
+        members = [n for n in oracled if family in queries[n].tags]
+        if not any(green.get(n) == newest for n in members):
+            window[members[0]] = None
+    window.update(dict.fromkeys(oracled))
+    return list(window)[:50]
 
 
 def all_queries() -> dict[str, Query]:
     """Import every operator module (triggering registration) and return
-    the full manifest, reordered so ``DRIVER_PRIORITY`` comes first."""
+    the full manifest, reordered so ``driver_window`` comes first."""
     import udacity_data_engineering_spark.etl.sparkify_queries  # noqa: F401
     import udacity_data_engineering_spark.functions  # noqa: F401
     import udacity_data_engineering_spark.operators  # noqa: F401
     import udacity_data_engineering_spark.sources  # noqa: F401
     import udacity_data_engineering_spark.streaming.stream_queries  # noqa: F401
 
-    missing = [n for n in DRIVER_PRIORITY if n not in _REGISTRY]
-    if missing:
-        raise RuntimeError(f"DRIVER_PRIORITY names not registered: {missing}")
-    ordered = {n: _REGISTRY[n] for n in DRIVER_PRIORITY}
+    ordered = {n: _REGISTRY[n] for n in driver_window(_REGISTRY)}
     ordered.update({n: q for n, q in _REGISTRY.items() if n not in ordered})
     return ordered

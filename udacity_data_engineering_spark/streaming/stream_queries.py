@@ -745,7 +745,7 @@ def q_streaming_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pinned via sc.environment), because under the external driver the "
     "JVM predates this repo's code and PYTHONPATH can't reach workers. "
     "State is one (long, double) pair per user — constant per key.",
-    tags=("E14", "streaming", "pandas"),
+    tags=("E14", "streaming", "pandas", "slow_oracle"),
 )
 def q_streaming_stateful_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     from udacity_data_engineering_spark.streaming.stateful import (
@@ -935,7 +935,7 @@ def write_time_ordered_feed(
     "sessionization — the injected-expiry oracle: every session the "
     "stream closes (by arrival gap or by timer) must equal a SQL "
     "session.",
-    tags=("E14", "streaming", "pandas"),
+    tags=("E14", "streaming", "pandas", "slow_oracle"),
 )
 def q_streaming_stateful_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     from udacity_data_engineering_spark.streaming.stateful import (
@@ -1034,7 +1034,7 @@ def q_streaming_stateful_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     "mtime-sequenced feed + far-future sentinel flushing all timers) "
     "and hash-proven against the batch gaps-and-islands sessionization "
     "grouped by (user, session, event_type).",
-    tags=("E14", "streaming", "pandas"),
+    tags=("E14", "streaming", "pandas", "slow_oracle"),
 )
 def q_streaming_stateful_mapstate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from udacity_data_engineering_spark.streaming.stateful import (
@@ -1131,7 +1131,7 @@ def q_streaming_stateful_mapstate(spark: SparkSession, sf_dir: str) -> DataFrame
     "then cleared. Executed as a REAL multi-batch stream (time-ordered "
     "mtime-sequenced feed + far-future sentinel) and hash-proven against "
     "the batch gaps-and-islands row_number()<=3 prefix.",
-    tags=("E14", "streaming", "pandas"),
+    tags=("E14", "streaming", "pandas", "slow_oracle"),
 )
 def q_streaming_stateful_liststate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from udacity_data_engineering_spark.streaming.stateful import (
@@ -1214,7 +1214,7 @@ def q_streaming_stateful_liststate(spark: SparkSession, sf_dir: str) -> DataFram
     "100 TB of backlog. Hash-proven against the full-history SQL "
     "aggregate restricted to users the stream actually touched (update "
     "mode emits only on input).",
-    tags=("E14", "streaming", "pandas"),
+    tags=("E14", "streaming", "pandas", "slow_oracle"),
 )
 def q_streaming_stateful_warmstart(spark: SparkSession, sf_dir: str) -> DataFrame:
     from udacity_data_engineering_spark.streaming.stateful import (
