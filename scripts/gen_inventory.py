@@ -30,6 +30,15 @@ def _driver_checked_names(repo: Path, manifest: dict) -> set[str]:
     return seen
 
 
+def inventory_row(name: str, q) -> str:
+    """The INVENTORY.md table row of registered query ``q``."""
+    check = "SQL oracle" if q.oracle else "rows-only"
+    mod = q.fn.__module__.rsplit(".", 1)[-1]
+    summary = " ".join(q.doc.split())[:110]
+    tags = ", ".join(q.tags) or "—"
+    return f"| {name} | {check} | {tags} | {mod} | {summary} |"
+
+
 def main() -> None:
     import argparse
 
@@ -72,13 +81,7 @@ def main() -> None:
         "| query | check | SURVEY tags | module | summary |",
         "|---|---|---|---|---|",
     ]
-    for name in sorted(manifest):
-        q = manifest[name]
-        check = "SQL oracle" if q.oracle else "rows-only"
-        mod = q.fn.__module__.rsplit(".", 1)[-1]
-        summary = " ".join(q.doc.split())[:110]
-        tags = ", ".join(q.tags) or "—"
-        lines.append(f"| {name} | {check} | {tags} | {mod} | {summary} |")
+    lines += [inventory_row(name, manifest[name]) for name in sorted(manifest)]
     Path(__file__).resolve().parents[1].joinpath("INVENTORY.md").write_text(
         "\n".join(lines) + "\n"
     )

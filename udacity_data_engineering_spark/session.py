@@ -18,7 +18,9 @@ reads later loads with it declared (see ``_read_parquet``): stock
 inference runs a one-task Spark job per ``spark.read.parquet`` call.
 
 All confs are runtime-settable so they also work on a session we did not
-build (the driver hands us its own ``SparkSession``).
+build (the driver hands us its own ``SparkSession``). Only sessions that
+``build_session`` launches get the launch-time ones on top, such as the
+``file:`` FileSystem that does not fork ``chmod`` (``nio_fs_confs``).
 """
 
 from __future__ import annotations
@@ -250,6 +252,47 @@ def configure_object_store(
     return spark
 
 
+#: The ``file:`` FileSystem of sessions ``build_session`` launches: stock
+#: ``LocalFileSystem``, but ``setPermission`` is a chmod(2) inside the JVM,
+#: not a forked ``chmod`` process per created file and directory
+#: (``jvm/NioLocalFileSystem.java``; rebuild with scripts/build_nio_fs.py).
+NIO_FS_CLASS = "udacity_data_engineering_spark.jvm.NioLocalFileSystem"
+NIO_FS_JAR = Path(__file__).with_name("jvm") / "nio-local-fs.jar"
+
+
+def nio_fs_confs(options: dict[str, str]) -> dict[str, str]:
+    """Builder confs that make ``NIO_FS_CLASS`` the ``file:`` FileSystem.
+
+    If no JVM is running yet, this starts it with ``options`` plus the jar
+    on ``spark.driver.defaultExtraClassPath``. The launcher appends that
+    conf to ``spark.driver.extraClassPath``, so a launch that carries its
+    own ``--driver-class-path`` keeps it and gets the jar too.
+    ``fs.file.impl`` is only set if the class then loads in the driver JVM.
+    A JVM that was already running keeps its class path, so one started
+    without the jar stays stock.
+
+    ``SPARK_GRAFT_NIO_FS=0`` is the kill switch: no conf, stock ``chmod``.
+    """
+    if os.environ.get("SPARK_GRAFT_NIO_FS", "1") == "0":
+        return {}
+    from py4j.protocol import Py4JError
+    from pyspark import SparkConf, SparkContext
+
+    confs = {}
+    if SparkContext._gateway is None:
+        confs["spark.driver.defaultExtraClassPath"] = str(NIO_FS_JAR)
+        conf = SparkConf().setAll([*options.items(), *confs.items()])
+        SparkContext._ensure_initialized(conf=conf)
+    jvm = SparkContext._jvm
+    try:
+        jvm.java.lang.Class.forName(
+            NIO_FS_CLASS, False, jvm.java.lang.ClassLoader.getSystemClassLoader()
+        )
+    except Py4JError:
+        return confs
+    return {**confs, "spark.hadoop.fs.file.impl": NIO_FS_CLASS}
+
+
 def build_session(
     app_name: str = "udacity-data-engineering-spark",
     cpus: int | None = None,
@@ -264,41 +307,39 @@ def build_session(
     cluster this knob (and AQE coalesce) is sized to the data instead.
     For the same reason the file-listing job that a read of more than 32
     paths runs gets at most one task per core, not one per path (stock
-    caps it at 10000).
+    caps it at 10000). Local-filesystem writes set permissions without
+    forking ``chmod`` (``nio_fs_confs``; ``SPARK_GRAFT_NIO_FS=0`` is stock).
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or os.cpu_count() or 8
     shuffle_partitions = shuffle_partitions or cpus
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.sources.parallelPartitionDiscovery.parallelism", str(cpus))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
-        .config("spark.ui.enabled", "false")
+    options = {
+        "spark.master": f"local[{cpus}]",
+        "spark.app.name": app_name,
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.sources.parallelPartitionDiscovery.parallelism": str(cpus),
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "16g"),
+        "spark.ui.enabled": "false",
         # no `[Stage N:>` bars: scripts on this session log to files
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        "spark.ui.showConsoleProgress": "false",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
         # catalog-table writes (bucketed tables) land in /tmp, not the
         # repo; per-process dir so stale files from a previous session
         # can't collide with managed-table locations
-        .config(
-            "spark.sql.warehouse.dir",
-            os.environ.get(
-                "SPARK_WAREHOUSE_DIR", f"/tmp/uds_warehouse_{os.getpid()}"
-            ),
-        )
-    )
-    for key, value in RUNTIME_CONFS.items():
-        builder = builder.config(key, value)
+        "spark.sql.warehouse.dir": os.environ.get(
+            "SPARK_WAREHOUSE_DIR", f"/tmp/uds_warehouse_{os.getpid()}"
+        ),
+        **RUNTIME_CONFS,
+    }
     if object_store_cfg is not None or s3a_endpoint is not None:
         # Reference parity (etl.py:26-29): pull hadoop-aws and wire
         # dl.cfg credentials. Requires network for ivy resolution, so it
         # is strictly opt-in; None/"" object_store_cfg means env creds.
-        builder = builder.config("spark.jars.packages", S3A_PACKAGE)
-        for key, value in s3a_confs(
-            load_credentials(object_store_cfg or None), s3a_endpoint
-        ).items():
-            builder = builder.config(key, value)
+        options["spark.jars.packages"] = S3A_PACKAGE
+        options.update(s3a_confs(load_credentials(object_store_cfg or None), s3a_endpoint))
+    options.update(nio_fs_confs(options))
+    builder = SparkSession.builder
+    for key, value in options.items():
+        builder = builder.config(key, value)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return configure(spark)
