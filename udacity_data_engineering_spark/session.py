@@ -261,7 +261,7 @@ NIO_FS_JAR = Path(__file__).with_name("jvm") / "nio-local-fs.jar"
 
 
 def nio_fs_confs(options: dict[str, str]) -> dict[str, str]:
-    """Builder confs that make ``NIO_FS_CLASS`` the ``file:`` FileSystem.
+    """The builder conf that makes ``NIO_FS_CLASS`` the ``file:`` FileSystem.
 
     If no JVM is running yet, this starts it with ``options`` plus the jar
     on ``spark.driver.defaultExtraClassPath``. The launcher appends that
@@ -271,26 +271,25 @@ def nio_fs_confs(options: dict[str, str]) -> dict[str, str]:
     A JVM that was already running keeps its class path, so one started
     without the jar stays stock.
 
-    ``SPARK_GRAFT_NIO_FS=0`` is the kill switch: no conf, stock ``chmod``.
+    ``SPARK_GRAFT_NIO_FS=0`` is the kill switch: no jar, no conf, stock
+    ``chmod``.
     """
     if os.environ.get("SPARK_GRAFT_NIO_FS", "1") == "0":
         return {}
     from py4j.protocol import Py4JError
     from pyspark import SparkConf, SparkContext
 
-    confs = {}
     if SparkContext._gateway is None:
-        confs["spark.driver.defaultExtraClassPath"] = str(NIO_FS_JAR)
-        conf = SparkConf().setAll([*options.items(), *confs.items()])
-        SparkContext._ensure_initialized(conf=conf)
+        launch = {**options, "spark.driver.defaultExtraClassPath": str(NIO_FS_JAR)}
+        SparkContext._ensure_initialized(conf=SparkConf().setAll(launch.items()))
     jvm = SparkContext._jvm
     try:
         jvm.java.lang.Class.forName(
             NIO_FS_CLASS, False, jvm.java.lang.ClassLoader.getSystemClassLoader()
         )
     except Py4JError:
-        return confs
-    return {**confs, "spark.hadoop.fs.file.impl": NIO_FS_CLASS}
+        return {}
+    return {"spark.hadoop.fs.file.impl": NIO_FS_CLASS}
 
 
 def build_session(
