@@ -6,7 +6,6 @@ contract (only nprobe of k inverted lists are scanned)."""
 from __future__ import annotations
 
 import random
-import uuid
 
 import numpy as np
 import pytest
@@ -14,11 +13,9 @@ from pyspark.sql import functions as F
 
 from udacity_data_engineering_spark.operators.ann import (
     _probe_ids,
-    cached_ivf_index,
     ivf_assign,
     ivf_topk,
 )
-from udacity_data_engineering_spark.operators.pq import cached_pq_index, pq_train
 from udacity_data_engineering_spark.plans.registry import all_queries
 
 
@@ -139,22 +136,6 @@ def test_ivf_index_build_job_budget(spark, job_tasks):
         assigned.cache().count()
     assigned.unpersist()
     assert len(tasks) == 8, tasks
-
-
-def test_cached_indexes_share_one_sample(spark, job_tasks):
-    """The PQ and IVF indexes of one sf_dir train on one drawn sample:
-    the second build runs no sample job, and both models equal what
-    each trainer gets from drawing the sample itself."""
-    df, _ = _planted_corpus(spark)
-    books = pq_train(df)
-    _, centers = ivf_assign(df)
-    sf_dir = f"planted-{uuid.uuid4().hex}"
-    _, cached_books = cached_pq_index(spark, sf_dir, df)
-    with job_tasks() as tasks:
-        assigned, cached_centers = cached_ivf_index(spark, sf_dir, df)
-    assert tasks == []
-    assert cached_books == books and cached_centers == centers
-    assert assigned.count() == df.count()
 
 
 @pytest.mark.parametrize("name, jobs", [("q_ivf_topk", 2), ("q_pq_topk", 3), ("q_ivfpq_topk", 4)])

@@ -163,9 +163,8 @@ def test_ensemble_eviction_keeps_live_ivf_frame(spark, monkeypatch):
     # equal plans, so identical stub frames would alias each other
     sizes = itertools.count(4)
     monkeypatch.setattr(
-        ann, "ivf_assign", lambda emb, sample: (spark.range(next(sizes)), [[0.0]])
+        ann, "ivf_assign", lambda emb: (spark.range(next(sizes)), [[0.0]])
     )
-    monkeypatch.setattr(ann, "cached_unit_sample", lambda *_a: None)
 
     a, b, c = (f"stub-ivf-owner-{x}" for x in "abc")
     emb = spark.range(1)

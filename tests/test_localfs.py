@@ -1,9 +1,9 @@
 """The ``file:`` FileSystem that ``build_session`` installs
 (``jvm/NioLocalFileSystem.java``): a partitioned write forks no ``chmod``,
-the kill switch and a JVM started without the jar give stock behaviour, a
-launch with its own ``--driver-class-path`` keeps it, every mode lands as
-stock ``chmod`` sets it, and the committed jar is built from the committed
-source.
+a JVM started without the jar stays stock, a launch keeps its own
+``--driver-class-path`` and ``spark-defaults.conf`` class path, every mode
+lands as stock ``chmod`` sets it, and the committed jar is built from the
+committed source.
 
 One JVM per process is a Spark invariant, so the session checks run in
 subprocesses with a logging ``chmod`` first on PATH.
@@ -83,19 +83,25 @@ def test_partitioned_write_forks_no_chmod(tmp_path):
     assert calls == []
 
 
-def test_kill_switch_adds_no_conf_and_forks_chmod(tmp_path):
-    result, calls = _run_child(tmp_path, {"SPARK_GRAFT_NIO_FS": "0"})
-    assert result["impl"] is None and result["jar"] is None
-    assert str(NIO_FS_JAR) not in result["class_path"]
-    # every partition directory and part file (and its .crc) forks one
-    assert len(calls) > 20
-
-
 def test_own_driver_class_path_is_kept(tmp_path):
     extra = tmp_path / "extra"
     extra.mkdir()
     submit = f"--driver-class-path {extra} pyspark-shell"
     result, calls = _run_child(tmp_path, {"PYSPARK_SUBMIT_ARGS": submit})
+    entries = [e.rstrip("/") for e in result["class_path"].split(os.pathsep)]
+    assert str(extra) in entries and str(NIO_FS_JAR) in entries
+    assert result["impl"] == NIO_FS_CLASS
+    assert calls == []
+
+
+def test_spark_defaults_class_path_is_kept(tmp_path):
+    extra, conf_dir = tmp_path / "extra", tmp_path / "conf"
+    extra.mkdir()
+    conf_dir.mkdir()
+    key = "spark.driver.defaultExtraClassPath"
+    (conf_dir / "spark-defaults.conf").write_text(f"# launcher defaults\n{key} {extra}\n")
+    result, calls = _run_child(tmp_path, {"SPARK_CONF_DIR": str(conf_dir)})
+    assert result["jar"] == f"{extra}{os.pathsep}{NIO_FS_JAR}"
     entries = [e.rstrip("/") for e in result["class_path"].split(os.pathsep)]
     assert str(extra) in entries and str(NIO_FS_JAR) in entries
     assert result["impl"] == NIO_FS_CLASS

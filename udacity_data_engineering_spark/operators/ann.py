@@ -38,12 +38,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from udacity_data_engineering_spark.operators.pq import (
-    cached_unit_sample,
-    lloyd,
-    unit_sample,
-    vec0_topk,
-)
+from udacity_data_engineering_spark.operators.pq import lloyd, unit_sample, vec0_topk
 from udacity_data_engineering_spark.operators.similarity import (
     cosine,
     double_array_sql,
@@ -81,11 +76,9 @@ def ivf_assign(
     k: int = 16,
     seed: int = 7,
     max_iter: int = 8,
-    sample: np.ndarray | None = None,
 ):
     """Train seeded Lloyd k-means on a bounded sample of L2-normalized
-    vectors (``unit_sample``, or ``sample`` if given) and assign every
-    non-null row to its nearest centroid.
+    vectors and assign every non-null row to its nearest centroid.
 
     Returns ``(assigned, centers)``: the input plus ``emb_d`` (the
     double-cast vector) and ``cluster`` (int) columns, and the centroid
@@ -101,8 +94,7 @@ def ivf_assign(
     prepped = emb.filter(F.col(vec_col).isNotNull()).withColumn(
         "emb_d", F.col(vec_col).cast("array<double>")
     )
-    if sample is None:
-        sample = unit_sample(emb, vec_col, seed=seed)
+    sample = unit_sample(emb, vec_col, seed=seed)
     if not len(sample):
         return prepped.withColumn("cluster", F.lit(0).cast("int")), []
     centers = lloyd(sample, k, seed=seed, iters=max_iter)
@@ -178,7 +170,7 @@ def cached_ivf_index(
     of (vec_id, emb_d, cluster)."""
 
     def build():
-        assigned, centers = ivf_assign(emb, sample=cached_unit_sample(spark, sf_dir, emb))
+        assigned, centers = ivf_assign(emb)
         return assigned.cache(), centers
 
     return session_cached(spark, sf_dir, "ivf_index", build)

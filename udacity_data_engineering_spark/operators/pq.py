@@ -107,21 +107,6 @@ def unit_sample(
     return mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
 
 
-def cached_unit_sample(spark: SparkSession, sf_dir: str, emb: DataFrame) -> np.ndarray:
-    """The session's ``unit_sample`` (default seed and size) of this
-    sf_dir's corpus, drawn once and trained on by both cached ANN
-    indexes (``cached_pq_index``, ``ann.cached_ivf_index``): each used
-    to draw the same sample itself, one count and collect apiece. The
-    matrix is read-only; the trainers only read it."""
-
-    def build():
-        sample = unit_sample(emb)
-        sample.flags.writeable = False
-        return sample
-
-    return session_cached(spark, sf_dir, "unit_sample", build)
-
-
 def pq_train(
     emb: DataFrame,
     vec_col: str = "embedding",
@@ -130,17 +115,14 @@ def pq_train(
     dim: int = 64,
     sample_n: int = SAMPLE_N,
     seed: int = 7,
-    sample: np.ndarray | None = None,
 ) -> list[list[list[float]]]:
     """Train per-subspace codebooks on a bounded, seeded sample of
-    unit-normalized vectors (``unit_sample``, or ``sample`` if given).
-    Returns an (m, k, dim/m) nested list — model metadata small enough
-    to fold into query plans as literals."""
+    unit-normalized vectors (``unit_sample``). Returns an (m, k, dim/m)
+    nested list — model metadata small enough to fold into query plans
+    as literals."""
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
-    mat = sample if sample is not None else unit_sample(
-        emb, vec_col, dim=dim, sample_n=sample_n, seed=seed
-    )
+    mat = unit_sample(emb, vec_col, dim=dim, sample_n=sample_n, seed=seed)
     dsub = dim // m
     return [
         lloyd(mat[:, i * dsub : (i + 1) * dsub], k, seed=seed + i).tolist()
@@ -262,7 +244,7 @@ def cached_pq_index(
     re-training."""
 
     def build():
-        books = pq_train(emb, sample=cached_unit_sample(spark, sf_dir, emb))
+        books = pq_train(emb)
         return pq_encode(emb, books).cache(), books
 
     return session_cached(spark, sf_dir, "pq_index", build)

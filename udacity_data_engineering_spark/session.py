@@ -20,12 +20,13 @@ inference runs a one-task Spark job per ``spark.read.parquet`` call.
 All confs are runtime-settable so they also work on a session we did not
 build (the driver hands us its own ``SparkSession``). Only sessions that
 ``build_session`` launches get the launch-time ones on top, such as the
-``file:`` FileSystem that does not fork ``chmod`` (``nio_fs_confs``).
+``file:`` FileSystem that does not fork ``chmod`` (``launch_with_nio_fs``).
 """
 
 from __future__ import annotations
 
 import os
+import re
 import shutil
 from collections.abc import Callable
 from pathlib import Path
@@ -260,27 +261,43 @@ NIO_FS_CLASS = "udacity_data_engineering_spark.jvm.NioLocalFileSystem"
 NIO_FS_JAR = Path(__file__).with_name("jvm") / "nio-local-fs.jar"
 
 
-def nio_fs_confs(options: dict[str, str]) -> dict[str, str]:
-    """The builder conf that makes ``NIO_FS_CLASS`` the ``file:`` FileSystem.
+def _spark_defaults() -> dict[str, str]:
+    """The ``spark-defaults.conf`` the launcher reads (``$SPARK_CONF_DIR``,
+    else ``$SPARK_HOME/conf``), one ``key value`` pair a line; empty if
+    there is none."""
+    from pyspark.find_spark_home import _find_spark_home
 
-    If no JVM is running yet, this starts it with ``options`` plus the jar
-    on ``spark.driver.defaultExtraClassPath``. The launcher appends that
-    conf to ``spark.driver.extraClassPath``, so a launch that carries its
-    own ``--driver-class-path`` keeps it and gets the jar too.
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(_find_spark_home(), "conf")
+    path = Path(conf_dir) / "spark-defaults.conf"
+    if not path.is_file():
+        return {}
+    lines = (line.strip() for line in path.read_text().splitlines())
+    pairs = (re.match(r"([^\s=:]+)\s*[\s=:]\s*(.*)", line) for line in lines
+             if line and line[0] not in "#!")
+    return {m[1]: m[2] for m in pairs if m}
+
+
+def launch_with_nio_fs(options: dict[str, str]) -> dict[str, str]:
+    """Launch the JVM gateway with the NIO jar; return the builder conf
+    that makes ``NIO_FS_CLASS`` the ``file:`` FileSystem.
+
+    If no JVM is running yet, this starts it (``SparkContext``'s gateway,
+    not yet a context) with ``options`` plus the jar appended to
+    ``spark.driver.defaultExtraClassPath`` as ``spark-defaults.conf``
+    sets it. The launcher appends that conf to
+    ``spark.driver.extraClassPath``, so a launch that carries its own
+    ``--driver-class-path`` keeps it and gets the jar too.
     ``fs.file.impl`` is only set if the class then loads in the driver JVM.
     A JVM that was already running keeps its class path, so one started
     without the jar stays stock.
-
-    ``SPARK_GRAFT_NIO_FS=0`` is the kill switch: no jar, no conf, stock
-    ``chmod``.
     """
-    if os.environ.get("SPARK_GRAFT_NIO_FS", "1") == "0":
-        return {}
     from py4j.protocol import Py4JError
     from pyspark import SparkConf, SparkContext
 
     if SparkContext._gateway is None:
-        launch = {**options, "spark.driver.defaultExtraClassPath": str(NIO_FS_JAR)}
+        key = "spark.driver.defaultExtraClassPath"
+        class_path = [_spark_defaults().get(key, ""), str(NIO_FS_JAR)]
+        launch = {**options, key: os.pathsep.join(filter(None, class_path))}
         SparkContext._ensure_initialized(conf=SparkConf().setAll(launch.items()))
     jvm = SparkContext._jvm
     try:
@@ -307,7 +324,7 @@ def build_session(
     For the same reason the file-listing job that a read of more than 32
     paths runs gets at most one task per core, not one per path (stock
     caps it at 10000). Local-filesystem writes set permissions without
-    forking ``chmod`` (``nio_fs_confs``; ``SPARK_GRAFT_NIO_FS=0`` is stock).
+    forking ``chmod`` (``launch_with_nio_fs``, which starts the JVM).
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or os.cpu_count() or 8
     shuffle_partitions = shuffle_partitions or cpus
@@ -335,7 +352,7 @@ def build_session(
         # is strictly opt-in; None/"" object_store_cfg means env creds.
         options["spark.jars.packages"] = S3A_PACKAGE
         options.update(s3a_confs(load_credentials(object_store_cfg or None), s3a_endpoint))
-    options.update(nio_fs_confs(options))
+    options.update(launch_with_nio_fs(options))
     builder = SparkSession.builder
     for key, value in options.items():
         builder = builder.config(key, value)
